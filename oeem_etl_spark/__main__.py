@@ -6,12 +6,12 @@ Commands:
                                  execute one declared query and print rows
     sql "<SELECT ...>" [--sf-dir DIR] [--limit N]
                                  run ad-hoc Spark SQL over the registered tables
-    bench                        delegate to bench.py (one JSON line)
 
 The fixture tables (region nation customer supplier part orders lineitem
 events documents embeddings) are registered as temp views for ``sql``, so
 the engine's whole surface is reachable interactively — the EP3 entry
-point of SURVEY.md §3.2.
+point of SURVEY.md §3.2. The benchmark lives in ``perfbench/``
+(``python3 perfbench/run.py --workload meter_etl``).
 """
 
 from __future__ import annotations
@@ -76,7 +76,6 @@ def main(argv: list[str] | None = None) -> int:
     ps.add_argument("stmt")
     ps.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"))
     ps.add_argument("--limit", type=int, default=20)
-    sub.add_parser("bench")
     a = p.parse_args(argv)
     if a.cmd == "list":
         return cmd_list()
@@ -84,15 +83,6 @@ def main(argv: list[str] | None = None) -> int:
         return cmd_run(a.name, a.sf_dir, a.limit, a.explain)
     if a.cmd == "sql":
         return cmd_sql(a.stmt, a.sf_dir, a.limit)
-    if a.cmd == "bench":
-        import runpy
-
-        sys.path.insert(0, str(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))))
-        runpy.run_path(
-            os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "bench.py"),
-            run_name="__main__",
-        )
-        return 0
     return 2
 
 

@@ -13,6 +13,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from oeem_etl_spark.session import configure
+
 TABLES = (
     "region",
     "nation",
@@ -29,45 +31,9 @@ TABLES = (
 # Dimension tables small enough to broadcast at any realistic scale factor.
 BROADCAST_DIMS = ("region", "nation", "supplier")
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
-
-
-def ensure_session_confs(spark: SparkSession) -> None:
-    """Set correctness- and perf-critical SQL confs on an external session.
-
-    The driver (and any library user) may hand us a SparkSession without
-    our factory's config block. Correctness-required:
-
-    - ``nanosAsLong``: parquet TIMESTAMP(NANOS) columns (events.ts) are
-      unreadable otherwise (PARQUET_TYPE_ILLEGAL); verified runtime-settable.
-    - UTC session timezone: timestamp collection/rendering must be
-      timezone-stable to match the oracle.
-
-    Performance (all runtime-settable SQL confs, harmless if already set):
-    a bare session defaults to 200 shuffle partitions, which is pathological
-    for iterative jobs (minhash-LSH connected components ran ~100 stages of
-    200 near-empty tasks each). AQE + a core-count-sized partition floor fix
-    that locally and are the right defaults on a real cluster too.
-
-    Set-once (marker conf): callers that deliberately override a knob after
-    session setup (e.g. bench.py's local-latency regime) must not be
-    clobbered by the next load_table call.
-    """
-    if spark.conf.get("spark.oeem.confsApplied", None) == "true":
-        return
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    cpus = spark.sparkContext.defaultParallelism
-    spark.conf.set("spark.sql.shuffle.partitions", str(max(cpus, 8)))
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    spark.conf.set("spark.oeem.confsApplied", "true")
 
 
 # (session, sf_dir, table) -> DataFrame. A DataFrame is an immutable logical
@@ -79,16 +45,16 @@ _TABLE_CACHE: dict[tuple, DataFrame] = {}
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    ensure_session_confs(spark)
+    configure(spark)
     key = (spark, sf_dir, name)
     df = _TABLE_CACHE.get(key)
     if df is None:
-        df = _canonicalize(spark.read.parquet(table_path(sf_dir, name)))
+        df = canonicalize(spark.read.parquet(table_path(sf_dir, name)))
         _TABLE_CACHE[key] = df
     return df
 
 
-def _canonicalize(df: DataFrame) -> DataFrame:
+def canonicalize(df: DataFrame) -> DataFrame:
     """Normalize engine-unreadable physical types to the logical model.
 
     ``events.ts`` has shipped in two physical vintages:
@@ -101,8 +67,10 @@ def _canonicalize(df: DataFrame) -> DataFrame:
     - parquet TIMESTAMP(MICROS) with isAdjustedToUTC=false, which Spark 4
       scans as TIMESTAMP_NTZ; the epoch/watermark/window surfaces
       (unix_micros, withWatermark, …) require TIMESTAMP, so cast. The
-      session timezone is pinned UTC (ensure_session_confs), making the
+      session timezone is pinned UTC (session.configure), making the
       NTZ→LTZ cast value-exact and matching the oracle's NTZ reading.
+
+    Works on batch and streaming DataFrames alike.
     """
     from pyspark.sql import functions as F
     from pyspark.sql import types as Ty

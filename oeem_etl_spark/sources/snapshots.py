@@ -30,7 +30,7 @@ Mechanics:
 - **Transactional compaction.** ``compact()`` rewrites the current file
   set into ~target-size files and publishes the result as a normal
   commit — readers see either the old files or the new, never a mix
-  (the safe replacement for writers.compact_parquet's two-rename swap).
+  (a directory swap by two renames would leave a gap readers can see).
 
 Single-filesystem scope: atomicity relies on same-volume ``os.link``;
 the manifest JSON is small (one entry per file) and never routed through

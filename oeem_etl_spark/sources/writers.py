@@ -42,58 +42,6 @@ def write_orc(df: DataFrame, path: str, partition_by: Sequence[str] | None = Non
     writer.orc(path)
 
 
-def compact_parquet(
-    spark,
-    path: str,
-    target_file_mb: int = 128,
-    partition_by: Sequence[str] = (),
-) -> int:
-    """Compact a small-files parquet directory toward ``target_file_mb``
-    output files; returns the number of files written.
-
-    The small-files problem is a first-order 100 TB concern: streaming
-    upserts and per-batch appends leave thousands of KB-scale files whose
-    open/footer costs dominate scans. Strategy: size the output file count
-    from the directory's actual bytes (driver-side metadata listing only —
-    no data through the driver), rewrite via repartition (round-robin when
-    unpartitioned, hash on the partition keys otherwise), then swap
-    directories.
-
-    The swap is two sequential renames, NOT atomic: a crash between them
-    leaves ``path`` absent with the data intact at ``<path>.compact_old``
-    (recovery: rename it back), and a concurrent reader can observe the
-    gap. Run it in a maintenance window, or on a table-format layer
-    (Delta/Iceberg) use its transactional rewrite instead.
-    """
-    import math
-    import os
-    import shutil
-
-    total_bytes = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if not f.startswith(("_", ".")):
-                total_bytes += os.path.getsize(os.path.join(root, f))
-    n_files = max(1, math.ceil(total_bytes / (target_file_mb * 1024 * 1024)))
-
-    df = spark.read.parquet(path)
-    if partition_by:
-        df = df.repartition(n_files, *[df[c] for c in partition_by])
-    else:
-        df = df.repartition(n_files)
-    tmp = f"{path}.compact_tmp"
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(tmp)
-    old = f"{path}.compact_old"
-    shutil.rmtree(old, ignore_errors=True)
-    os.replace(path, old)
-    os.replace(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
-    return n_files
-
-
 def write_sharded(
     df: DataFrame,
     path: str,

@@ -16,9 +16,9 @@ identically to ``spark.read`` and ``spark.readStream`` inputs.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from oeem_etl_spark.catalog import ensure_session_confs, table_path
+from oeem_etl_spark.catalog import canonicalize, table_path
+from oeem_etl_spark.session import configure
 
 
 def _glob_for(path: str) -> str:
@@ -41,7 +41,7 @@ def file_stream(
 ) -> DataFrame:
     """Unbounded-stream view of a fixture table (schema pinned from the
     batch footer — stream sources cannot infer)."""
-    ensure_session_confs(spark)
+    configure(spark)
     path = table_path(sf_dir, table)
     schema = _SCHEMA_CACHE.get(path)
     if schema is None:
@@ -54,13 +54,6 @@ def file_stream(
 
 
 def events_stream(spark: SparkSession, sf_dir: str, **kw) -> DataFrame:
-    """Streaming ``events`` with the same ns→µs timestamp canonicalization
-    the batch catalog applies (catalog._canonicalize)."""
-    df = file_stream(spark, sf_dir, "events", **kw)
-    if dict(df.dtypes).get("ts") == "bigint":
-        df = df.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
-    elif dict(df.dtypes).get("ts") == "timestamp_ntz":
-        # withWatermark/window require TIMESTAMP; session tz is UTC so the
-        # cast is value-exact (same rule as catalog._canonicalize)
-        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
+    """Streaming ``events`` with the batch catalog's timestamp
+    canonicalization (catalog.canonicalize)."""
+    return canonicalize(file_stream(spark, sf_dir, "events", **kw))

@@ -22,15 +22,10 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
 @pytest.fixture(scope="session")
 def spark():
     s = get_session("oeem-etl-spark-tests")
-    # r10 (VERDICT r9 #8 — keep the suite inside the driver's window):
-    # run tests under the measured local-latency regime (bench.py's
-    # documented MB-scale confs — AQE's stage-materialization barriers
-    # cost 0.1-0.3 s per sub-second query and the suite runs ~1000 of
-    # them; results are partitioning-independent by design). The AQE-on
-    # cluster regime stays covered by bench.py pass 3 and the
-    # verify-skill hostile-config sweep.
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
+    # Tests run with the library's own SQL settings (session.configure:
+    # AQE on, core-count shuffle partitions), the same ones every
+    # load_table caller gets; only scan splits are sized for the MB-scale
+    # fixtures.
     s.conf.set("spark.sql.files.maxPartitionBytes", str(4 * 1024 * 1024))
     return s
 

@@ -73,23 +73,6 @@ def test_approx_count_distinct_near_exact(spark, sf_dir):
         assert abs(a - exact[k]) / exact[k] < 0.05, (k, a, exact[k])
 
 
-def test_compact_parquet_reduces_files(spark, sf_dir, tmp_path):
-    from oeem_etl_spark.catalog import load_table
-    from oeem_etl_spark.sources.writers import compact_parquet
-
-    path = str(tmp_path / "frag")
-    ev = load_table(spark, sf_dir, "events")
-    ev.repartition(40).write.parquet(path)
-    import glob
-    before = len(glob.glob(f"{path}/part-*"))
-    assert before >= 40
-    rows_before = spark.read.parquet(path).count()
-    n = compact_parquet(spark, path, target_file_mb=128)
-    after = len(glob.glob(f"{path}/part-*"))
-    assert n == 1 and after == 1
-    assert spark.read.parquet(path).count() == rows_before
-
-
 def test_salted_collect_list_matches_plain(spark, sf_dir):
     from oeem_etl_spark.catalog import load_table
     from oeem_etl_spark.operators.skew import salted_collect_list

@@ -1,8 +1,9 @@
 """The fixture `events.ts` column has shipped in two physical parquet
 vintages (TIMESTAMP(NANOS)→int64-under-nanosAsLong in round 1, µs
-TIMESTAMP_NTZ in round 2). catalog._canonicalize must normalize BOTH to
-TimestampType (LTZ) so epoch/watermark/window surfaces resolve, and the
-values must be identical because the session timezone is pinned UTC."""
+TIMESTAMP_NTZ in round 2). catalog.canonicalize must normalize BOTH to
+TimestampType (LTZ), in batch loads and in streaming.source.events_stream,
+so epoch/watermark/window surfaces resolve, and the values must be
+identical because the session timezone is pinned UTC."""
 
 from __future__ import annotations
 
@@ -12,6 +13,7 @@ from pyspark.sql import functions as F
 
 from oeem_etl_spark import catalog
 from oeem_etl_spark.operators.timeseries import sessionize
+from oeem_etl_spark.streaming.source import events_stream
 
 ROWS = [
     (1, dt.datetime(2026, 1, 1, 0, 0, 0), 10, "a", 1.5, "{}"),
@@ -38,6 +40,7 @@ def test_both_vintages_canonicalize_to_ltz(spark, tmp_path):
         sf_dir = _write_events(spark, tmp_path, schema, sub)
         ev = catalog.load_table(spark, sf_dir, "events")
         assert dict(ev.dtypes)["ts"] == "timestamp", sub
+        assert dict(events_stream(spark, sf_dir).dtypes)["ts"] == "timestamp", sub
         # epoch surface resolves and round-trips the UTC wall-clock value
         got = (
             ev.select("event_id", F.unix_seconds("ts").alias("es"))

@@ -38,7 +38,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 def session(bloom: bool) -> SparkSession:
     b = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]")
+        SparkSession.builder.master(f"local[{len(os.sched_getaffinity(0))}]")
         .appName(f"bloom-probe-{bloom}")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")

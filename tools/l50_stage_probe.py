@@ -25,7 +25,7 @@ from oeem_etl_spark import plans  # noqa: E402
 from oeem_etl_spark.plans import registry  # noqa: E402
 from oeem_etl_spark.session import get_session  # noqa: E402
 from oeem_etl_spark.operators import dedup  # noqa: E402
-from oeem_etl_spark.catalog import ensure_session_confs, load_table  # noqa: E402
+from oeem_etl_spark.catalog import load_table  # noqa: E402
 
 
 def timed(spark, label, thunk, n=3):
@@ -47,7 +47,6 @@ def main() -> None:
     plans.load_all()
     qs = registry.queries()
     spark = get_session("l50-stage-probe")
-    ensure_session_confs(spark)
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(4 * 1024 * 1024))
     spark.conf.set("spark.sql.shuffle.partitions", "8")

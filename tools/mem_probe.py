@@ -109,9 +109,9 @@ def main() -> None:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-    from oeem_etl_spark.catalog import ensure_session_confs
+    from oeem_etl_spark.session import configure
 
-    ensure_session_confs(spark)
+    configure(spark)
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.shuffle.partitions", "64")
     spark.conf.set(

@@ -49,7 +49,7 @@ HEADLINE = [
     "l70_phrase_search",
     "m22_hilbert_layout",
     "l64d_bpe_encode",
-    # every bench.py EXTRA (VERDICT r5 task #4): the expensive operators
+    # the expensive-operator extras (VERDICT r5 task #4): the operators
     # where a silent plan regression would cost the most — committed plan
     # evidence each round instead of only timings
     "l2_minhash_lsh_dedup",
@@ -146,7 +146,7 @@ def audit(plan: str, executed: str) -> dict:
 BENCH_HEADLINE = HEADLINE[:14]  # the BASELINE.md 14-query headline set
 
 # The bounds GATE set (VERDICT r7 task #4): the 14 headline queries plus
-# every bench.py EXTRA — the expensive operators where a silent plan
+# the expensive-operator extras — where a silent plan
 # regression would cost the most. Iterative queries (l2 signatures, l64
 # merge rounds, l63b Lloyd training) record their FINAL stage's static
 # plan only (lineage truncated by localCheckpoint, by design); their
@@ -220,7 +220,7 @@ def static_bounds(plan: str) -> dict:
 
 def gen_bounds(sf_dir: str) -> None:
     """Record the CURRENT static-plan invariants of the 14 headline
-    queries AND the 16 bench extras into tools/plan_bounds.json (run
+    queries AND the 16 expensive-operator extras into tools/plan_bounds.json (run
     after an intentional plan change; the pytest gate compares against
     this file)."""
     import json
@@ -263,7 +263,7 @@ def main() -> None:
     lines = [
         "# Physical-plan audit (generated by tools/plan_audit.py)",
         "",
-        f"Scale dir: `{SF_DIR}`; bench session confs. Per query: every",
+        f"Scale dir: `{SF_DIR}`; library session confs. Per query: every",
         "parquet scan's pruned column count + pushed filters, shuffle and",
         "broadcast counts, WholeStageCodegen span count, and any Python",
         "eval nodes (Arrow-batched UDF stages — expected only on the",

@@ -8,12 +8,11 @@ sys.path.insert(0, "/root/repo")
 from pyspark.sql import functions as F
 
 from oeem_etl_spark.session import get_session
-from oeem_etl_spark.catalog import ensure_session_confs, load_table
+from oeem_etl_spark.catalog import load_table
 from oeem_etl_spark.functions.fixedpoint import qlong
 
 sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 spark = get_session("k23-probe")
-ensure_session_confs(spark)
 spark.conf.set("spark.sql.adaptive.enabled", "false")
 spark.conf.set("spark.sql.files.maxPartitionBytes", str(4 * 1024 * 1024))
 spark.conf.set("spark.sql.shuffle.partitions", "8")

@@ -55,9 +55,6 @@ def main() -> None:
     plans.load_all()
     qs = registry.queries()
     spark = get_session("qlong-ab2")
-    from oeem_etl_spark.catalog import ensure_session_confs
-
-    ensure_session_confs(spark)
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(4 * 1024 * 1024))
     spark.conf.set("spark.sql.shuffle.partitions", "8")

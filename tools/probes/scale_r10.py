@@ -32,9 +32,9 @@ sys.path.insert(0, str(REPO / "tools"))
 from pyspark.sql import functions as F  # noqa: E402
 
 from oeem_etl_spark import plans  # noqa: E402
-from oeem_etl_spark.catalog import ensure_session_confs, load_table  # noqa: E402
+from oeem_etl_spark.catalog import load_table  # noqa: E402
 from oeem_etl_spark.plans import registry  # noqa: E402
-from oeem_etl_spark.session import get_session  # noqa: E402
+from oeem_etl_spark.session import configure  # noqa: E402
 
 import scale_probe  # noqa: E402  (tools/ on path)
 
@@ -137,7 +137,7 @@ def main() -> None:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-    ensure_session_confs(spark)
+    configure(spark)
     # production regime: AQE on, default partitions (scale evidence, not
     # the local-latency bench regime)
     spark.conf.set("spark.sql.adaptive.enabled", "true")

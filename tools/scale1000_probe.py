@@ -28,7 +28,6 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from pyspark.sql import functions as F
 
-from oeem_etl_spark.catalog import ensure_session_confs
 from oeem_etl_spark.session import get_session
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -73,7 +72,6 @@ def main() -> None:
     if "--artifact" in sys.argv:
         artifact = sys.argv[sys.argv.index("--artifact") + 1]
     spark = get_session("oeem-scale1000")
-    ensure_session_confs(spark)
     build_1000(spark)
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.shuffle.partitions", "64")

@@ -27,7 +27,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from pyspark.sql import functions as F
 
-from oeem_etl_spark.catalog import ensure_session_confs, load_table
+from oeem_etl_spark.catalog import load_table
 from oeem_etl_spark.operators.dedup import exact_dedup, minhash_signatures
 from oeem_etl_spark.plans.util import dsum
 from oeem_etl_spark.session import get_session
@@ -748,7 +748,6 @@ def main() -> None:
         artifact = sys.argv[sys.argv.index("--artifact") + 1]
 
     spark = get_session("oeem-scale-probe")
-    ensure_session_confs(spark)
     build_scaled(spark)
 
     regimes = {

@@ -28,7 +28,6 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from pyspark.sql import functions as F
 
-from oeem_etl_spark.catalog import ensure_session_confs
 from oeem_etl_spark.operators.skew import salted_agg, salted_join
 from oeem_etl_spark.session import get_session
 
@@ -54,7 +53,6 @@ def build(spark) -> None:
 
 def main() -> None:
     spark = get_session("oeem-skew-probe")
-    ensure_session_confs(spark)
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(16 * 1024 * 1024))
     spark.conf.set("spark.sql.shuffle.partitions", "32")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
