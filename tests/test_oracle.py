@@ -120,6 +120,18 @@ def _rows(colnames, records):
     return sorted(out, key=repr)
 
 
+@pytest.fixture(scope="module", autouse=True)
+def _clear_cached_frames(spark):
+    """Running a query materializes the frames its operators persist
+    (k23's monthly rollup, d24b's projected base), and the shared
+    session's cache manager keeps them. A later query over the same
+    tables then plans against the cached frame, whose formatted plan
+    prints both the final and the initial adaptive plan, so a static
+    plan test counts its exchanges twice."""
+    yield
+    spark.catalog.clearCache()
+
+
 @pytest.mark.parametrize("name", SQL_CHECKED)
 def test_oracle_match(name, spark, duck, sf_dir):
     q = ALL[name]
