@@ -560,6 +560,11 @@ def calendarize_monthly(
     ANSI mode (pinned in session.py) keeps the long-sum overflow raise
     of the exploded form.
 
+    Like :func:`calendarize`, intervals must satisfy start ≤ end: a row
+    with start > end raises (``raise_error`` on that row) where the
+    exploded form's ``sequence()`` does. A month covered only by
+    NULL-valued intervals sums to NULL, as the exploded ``sum`` does.
+
     Output: ``month`` (first-of-month DATE), ``n_parts`` (BIGINT count
     of covering intervals = exploded rows), ``{value}_alloc_e4_sum``
     (BIGINT: Σ of the exact 1e-4-unit allocations).
@@ -567,10 +572,21 @@ def calendarize_monthly(
     s, e = F.col(start).cast("date"), F.col(end).cast("date")
     total = (F.datediff(e, s) + 1).cast("long")
     v4 = qlong(F.col(value_col), 10_000)
+    # __ms feeds every contribution's month and validity, so the check
+    # runs on every row whatever its value
+    ms = F.when(
+        s > e,
+        F.raise_error(
+            F.concat(
+                F.lit("calendarize_monthly: interval start "), s.cast("string"),
+                F.lit(" is after its end "), e.cast("string"),
+            )
+        ),
+    ).otherwise(F.trunc(s, "month"))
     pre = df.select(
         s.alias("__s"),
         e.alias("__e"),
-        F.trunc(s, "month").alias("__ms"),
+        ms.alias("__ms"),
         F.trunc(e, "month").alias("__me"),
         v4.alias("__v4"),
         total.alias("__total"),
@@ -588,16 +604,19 @@ def calendarize_monthly(
     single = F.col("__ms") == F.col("__me")
     has_middle = F.col("__me") >= F.add_months(F.col("__ms"), 2)
     zero = F.lit(0).cast("long")
+    # 1 for a valued interval: a month none of whose covering intervals
+    # has a value sums to NULL, not 0
+    has_v = F.col("__v4").isNotNull().cast("long")
     s_l = {
         L: _floordiv(F.col("__v4") * F.lit(L).cast("long"), tot) for L in (28, 29, 30, 31)
     }
 
-    def _contrib(month, d28, d29, d30, d31, dcnt, direct, cnt, valid):
+    def _contrib(month, d28, d29, d30, d31, dcnt, dvcnt, direct, cnt, vcnt, valid):
         return F.struct(
             month.alias("month"),
             d28.alias("d28"), d29.alias("d29"), d30.alias("d30"), d31.alias("d31"),
-            dcnt.alias("dcnt"), direct.alias("direct_e4"), cnt.alias("direct_cnt"),
-            valid.alias("valid"),
+            dcnt.alias("dcnt"), dvcnt.alias("dvcnt"), direct.alias("direct_e4"),
+            cnt.alias("direct_cnt"), vcnt.alias("direct_vcnt"), valid.alias("valid"),
         )
 
     neg = lambda c: F.when(has_middle, -c).otherwise(zero)  # noqa: E731
@@ -605,9 +624,9 @@ def calendarize_monthly(
         F.explode(
             F.array(
                 _contrib(
-                    F.col("__ms"), zero, zero, zero, zero, zero,
+                    F.col("__ms"), zero, zero, zero, zero, zero, zero,
                     _floordiv(F.col("__v4") * first_overlap, tot), F.lit(1).cast("long"),
-                    F.lit(True),
+                    has_v, F.lit(True),
                 ),
                 # the last month's direct contribution and the middle
                 # run's −diff both land on __me — one merged row
@@ -615,13 +634,14 @@ def calendarize_monthly(
                     F.col("__me"),
                     neg(s_l[28]), neg(s_l[29]), neg(s_l[30]), neg(s_l[31]),
                     F.when(has_middle, F.lit(-1).cast("long")).otherwise(zero),
+                    neg(has_v),
                     _floordiv(F.col("__v4") * last_overlap, tot), F.lit(1).cast("long"),
-                    ~single,
+                    has_v, ~single,
                 ),
                 _contrib(
                     F.add_months(F.col("__ms"), 1),
-                    s_l[28], s_l[29], s_l[30], s_l[31], F.lit(1).cast("long"),
-                    zero, zero, has_middle,
+                    s_l[28], s_l[29], s_l[30], s_l[31], F.lit(1).cast("long"), has_v,
+                    zero, zero, zero, has_middle,
                 ),
             )
         ).alias("c")
@@ -634,8 +654,10 @@ def calendarize_monthly(
         F.sum("c.d30").alias("d30"),
         F.sum("c.d31").alias("d31"),
         F.sum("c.dcnt").alias("dcnt"),
+        F.sum("c.dvcnt").alias("dvcnt"),
         F.sum("c.direct_e4").alias("direct_e4"),
         F.sum("c.direct_cnt").alias("direct_cnt"),
+        F.sum("c.direct_vcnt").alias("direct_vcnt"),
     ).persist(StorageLevel.MEMORY_AND_DISK)
     # dense month axis: the diffs only mark run boundaries, so months
     # covered purely as middles need their own row for the cumulative
@@ -658,7 +680,8 @@ def calendarize_monthly(
     dense = axis.join(F.broadcast(g), "month", "left").select(
         "month",
         *[F.coalesce(F.col(c), z).alias(c) for c in
-          ("d28", "d29", "d30", "d31", "dcnt", "direct_e4", "direct_cnt")],
+          ("d28", "d29", "d30", "d31", "dcnt", "dvcnt", "direct_e4", "direct_cnt",
+           "direct_vcnt")],
     )
     # single ordered pass over the bounded axis (intentionally one
     # window partition: the frame is O(months in span), never O(rows))
@@ -667,7 +690,9 @@ def calendarize_monthly(
         "month",
         "direct_e4",
         "direct_cnt",
-        *[F.sum(c).over(w).alias(f"c{c}") for c in ("d28", "d29", "d30", "d31", "dcnt")],
+        "direct_vcnt",
+        *[F.sum(c).over(w).alias(f"c{c}")
+          for c in ("d28", "d29", "d30", "d31", "dcnt", "dvcnt")],
     )
     dim = (F.datediff(F.last_day(F.col("month")), F.col("month")) + 1).cast("int")
     middle_e4 = (
@@ -680,7 +705,9 @@ def calendarize_monthly(
         cum.select(
             "month",
             (F.col("direct_cnt") + F.col("cdcnt")).alias("n_parts"),
-            (F.col("direct_e4") + middle_e4).alias(f"{value_col}_alloc_e4_sum"),
+            F.when(
+                F.col("direct_vcnt") + F.col("cdvcnt") > 0, F.col("direct_e4") + middle_e4
+            ).alias(f"{value_col}_alloc_e4_sum"),
         )
         .where(F.col("n_parts") > 0)
     )

@@ -176,7 +176,8 @@ class SnapshotTable:
         crash) and becomes a no-op returning the current version — the
         foreachBatch exactly-once recipe, transactional because the id
         rides inside the atomically-published manifest itself."""
-        assert mode in ("append", "overwrite"), mode
+        if mode not in ("append", "overwrite"):
+            raise ValueError(f"commit mode must be 'append' or 'overwrite', not {mode!r}")
         base = self.latest_version()
         if batch_id is not None and base is not None:
             last = self._manifest(base).get("batch_id")
@@ -222,9 +223,10 @@ class SnapshotTable:
         """Publish a NEW version whose membership equals ``to_version`` —
         history is append-only (the audit trail survives), matching
         Delta's RESTORE semantics."""
-        m = self._manifest(to_version)
         latest = self.latest_version()
-        assert latest is not None
+        if latest is None:
+            raise ValueError("cannot roll back an empty table")
+        m = self._manifest(to_version)
         new = {
             "version": latest + 1,
             "committed_at": time.time(),
@@ -246,7 +248,8 @@ class SnapshotTable:
         import math
 
         base = self.latest_version()
-        assert base is not None, "empty table"
+        if base is None:
+            raise ValueError("cannot compact an empty table")
         m = self._manifest(base)
         total = sum(e["bytes"] for e in m["files"])
         n = max(1, math.ceil(total / (target_file_mb * 1024 * 1024)))
@@ -262,7 +265,8 @@ class SnapshotTable:
         ordering: files first, manifests last, so a crash mid-vacuum
         leaves only still-listed (kept) or already-unlisted state, never
         a manifest pointing at a deleted file."""
-        assert retain_last >= 1, retain_last
+        if retain_last < 1:
+            raise ValueError(f"retain_last must be at least 1, not {retain_last}")
         vs = self.versions()
         keep, drop = vs[-retain_last:], vs[:-retain_last]
         if not drop:
@@ -289,7 +293,8 @@ class SnapshotTable:
         if version is not None:
             return self._manifest(version)
         vs = self.versions()
-        assert vs, "empty table"
+        if not vs:
+            raise ValueError("cannot read an empty table")
         if as_of is None:
             return self._manifest(vs[-1])
         best = None
@@ -297,7 +302,8 @@ class SnapshotTable:
             m = self._manifest(v)
             if m["committed_at"] <= as_of:
                 best = m
-        assert best is not None, f"no snapshot at or before {as_of}"
+        if best is None:
+            raise ValueError(f"no snapshot at or before {as_of}")
         return best
 
     def read(
@@ -384,7 +390,10 @@ class SnapshotTable:
         don't describe row-level changes across rewrites, so refusing is
         the correct behavior, not an approximation."""
         to_version = to_version if to_version is not None else self.latest_version()
-        assert to_version is not None and since_version <= to_version
+        if to_version is None or since_version > to_version:
+            raise ValueError(
+                f"bad change-feed range: since_version {since_version}, to_version {to_version}"
+            )
         for v in range(since_version + 1, to_version + 1):
             m = self._manifest(v)
             if m["mode"] != "append":

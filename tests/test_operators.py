@@ -573,6 +573,8 @@ def test_calendarize_monthly_equals_explode(spark):
         ("2020-06-10", "2020-06-10", 0.0),
         ("2020-01-01", "2020-12-31", 0.0001),
         ("2026-11-30", "2026-12-01", 2.5),      # boundary straddle
+        ("2020-01-10", "2020-04-10", None),     # NULL value beside valued ones
+        ("2030-03-05", "2030-05-20", None),     # months covered only by NULL
     ]
     rng = random.Random(42)
     base = datetime.date(2019, 1, 1)
@@ -591,11 +593,24 @@ def test_calendarize_monthly_equals_explode(spark):
     new = calendarize_monthly(df, "s", "e", "v").withColumnRenamed(
         "v_alloc_e4_sum", "e4"
     )
-    a = sorted(map(tuple, old.collect()))
-    b = sorted(map(tuple, new.collect()))
+    a = sorted(map(tuple, old.collect()), key=repr)
+    b = sorted(map(tuple, new.collect()), key=repr)
     assert a == b
+    assert (datetime.date(2030, 4, 1), 1, None) in b
     # empty input: no axis, no rows, no error
     assert calendarize_monthly(df.limit(0), "s", "e", "v").count() == 0
+    # start > end raises in both forms (the explode's sequence() and the
+    # fold's raise_error), never a quiet wrong sum
+    bad = df.union(
+        spark.createDataFrame(
+            [(datetime.date(2020, 5, 2), datetime.date(2020, 3, 9), 1.0)],
+            "s date, e date, v double",
+        )
+    )
+    with pytest.raises(Exception, match="(?i)sequence"):
+        calendarize(bad, "s", "e", "v", keys=[]).collect()
+    with pytest.raises(Exception, match="start 2020-05-02 is after its end 2020-03-09"):
+        calendarize_monthly(bad, "s", "e", "v").collect()
 
 
 def test_hard_negatives_excludes_same_label(spark):

@@ -1,11 +1,19 @@
 """One policy for the engine's runtime SQL settings (session.configure):
 every session gets them once, on get_session or on its first table load,
-and a caller's later override sticks."""
+and a caller's later override sticks. Launch settings of get_session hold
+too: a warm pass reuses the classes Spark generated on the previous one."""
 
 from __future__ import annotations
 
+import sys
+from pathlib import Path
+
 from oeem_etl_spark import catalog
+from oeem_etl_spark.plans import load_all, registry
 from oeem_etl_spark.session import get_session
+
+sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "perfbench"))
+from workloads import METER_ETL  # noqa: E402
 
 PARTITIONS = "spark.sql.shuffle.partitions"
 
@@ -35,3 +43,35 @@ def test_new_session_configured_on_first_load(spark, sf_dir):
     assert fresh.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
     assert fresh.conf.get(PARTITIONS) == str(fresh.sparkContext.defaultParallelism)
     assert dict(ev.dtypes)["ts"] == "timestamp"
+
+
+def test_warm_pass_compiles_no_generated_classes(spark, sf_dir):
+    """One meter_etl pass generates ~186 distinct classes, more than
+    Spark's default cache of 100, so at the default every warm pass
+    compiled ~171 of them again."""
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1000"
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    load_all()
+    queries = registry.all_queries()
+
+    def run_pass():
+        for name in METER_ETL:
+            queries[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+
+    # A class's source text carries its whole-stage codegen stage number.
+    # AQE numbers stages in the order its query stages finish, which
+    # varies from run to run (d24b's independent branches), so under AQE
+    # a warm pass can meet a new numbering. Without AQE the numbering is
+    # fixed, and any compile is an eviction.
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        # two warm-ups: the second plans over the frames operators
+        # persisted during the first
+        run_pass()
+        run_pass()
+        before = compiles.getCount()
+        run_pass()
+        assert compiles.getCount() == before
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+        spark.catalog.clearCache()

@@ -41,8 +41,34 @@ def test_as_of_timestamp_resolution(spark, table):
     t1 = table._manifest(1)["committed_at"]
     table.commit(spark.range(3, 6))
     assert _ids(table.read(spark, as_of=t1)) == [0, 1, 2]
-    with pytest.raises(AssertionError):
+    with pytest.raises(ValueError, match="no snapshot at or before"):
         table.read(spark, as_of=t1 - 1000)
+
+
+def _read_before_first_commit(t, spark):
+    t.commit(spark.range(1))
+    t.read(spark, as_of=0.0)
+
+
+@pytest.mark.parametrize(
+    "call, match",
+    [
+        (lambda t, spark: t.commit(spark.range(1), mode="upsert"), "commit mode"),
+        (lambda t, spark: t.rollback(1), "roll back an empty table"),
+        (lambda t, spark: t.compact(spark), "compact an empty table"),
+        (lambda t, spark: t.vacuum(retain_last=0), "retain_last must be at least 1"),
+        (lambda t, spark: t.read(spark), "read an empty table"),
+        (_read_before_first_commit, "no snapshot at or before"),
+        (lambda t, spark: t.read_incremental(spark, 2, 1), "bad change-feed range"),
+    ],
+    ids=["commit_mode", "rollback_empty", "compact_empty", "vacuum_retain",
+         "resolve_empty", "resolve_as_of", "incremental_range"],
+)
+def test_bad_arguments_raise_value_error(spark, table, call, match):
+    """Validation raises ValueError, which ``python -O`` keeps; an assert
+    would be stripped."""
+    with pytest.raises(ValueError, match=match):
+        call(table, spark)
 
 
 def test_rollback_appends_history(spark, table):
