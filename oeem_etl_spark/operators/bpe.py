@@ -91,7 +91,7 @@ def top_pair(words: DataFrame) -> tuple[str, str, int] | None:
     # tests/test_hostile_text.py. Guarded with a pre-FILTER, not a
     # CASE WHEN around the transform: single-symbol words contribute no
     # pairs either way, and the filter keeps the per-round hot expression
-    # unwrapped (VERDICT r7 watch-item on l64_bpe_train).
+    # (l64_bpe_train's merge rounds) unwrapped.
     pairs = words.where(F.size("syms") >= 2).select(
         "freq",
         F.explode(

@@ -515,8 +515,9 @@ def importance_weights(
     it feeds both the frequency aggregation and the scoring join probe
     side, and without the cache the scan+split+explode of every
     document runs twice (the same multi-branch-recompute fix as
-    prefix_filter_jaccard_join's persist_postings). Cache released by
-    the ContextCleaner with the frame.
+    prefix_filter_jaccard_join's persist_postings). The cached stream
+    stays in the session's cache manager until ``unpersist()`` or
+    ``clearCache()``, and a later build of the same plan reads it.
     """
     from pyspark import StorageLevel
 

@@ -144,9 +144,8 @@ def quantize_half_away(X: "np.ndarray") -> "np.ndarray":
 
 def moment_partials_fn(vec_col: str, q_scale: int):
     """Per-Arrow-batch EXACT integer moments (n, Σx, XᵀX) of the
-    half-away-quantized vectors — the mapInPandas closure shared by
-    pca_power_fixed and tools/scale_probe (so the probe always measures
-    the shipped shape). int64 matmul wraps silently on overflow, so the
+    half-away-quantized vectors — the mapInPandas closure of
+    pca_power_fixed. int64 matmul wraps silently on overflow, so the
     batch is guarded: max|x|²·rows must stay below 2^63 — a violation
     raises loudly instead of corrupting the moments."""
     import pandas as pd

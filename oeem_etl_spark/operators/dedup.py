@@ -423,7 +423,9 @@ def minhash_lsh_dedup(
     signatures from BOTH sides and the verify join re-reads candidates,
     so without the cache the minhash computation runs ~3× — measured
     4.4 → 1.8 s end-to-end at sf0.1. Signatures are num_perm ints per
-    doc (far smaller than the corpus); released by the ContextCleaner.
+    doc (far smaller than the corpus). The cached frames stay in the
+    session's cache manager until ``unpersist()`` or ``clearCache()``,
+    and a later build of the same plan reads them.
     """
     from pyspark.storagelevel import StorageLevel
 
@@ -433,8 +435,9 @@ def minhash_lsh_dedup(
     # it once and persist, instead of re-tokenizing+re-shingling the
     # corpus three times (measured: shingling is ~0.4 s of the 1.6 s
     # signature stage at sf0.1, and verify paid it twice more). Same
-    # MEMORY_AND_DISK posture and ContextCleaner release as the other
-    # intermediates; size ∝ corpus shingles, spillable.
+    # MEMORY_AND_DISK posture and lifetime as the other intermediates
+    # (held until unpersist() or clearCache()); size ∝ corpus shingles,
+    # spillable.
     sets = shingle_sets(df, key, text_col, shingle_k)
     if persist_intermediate:
         sets = sets.persist(StorageLevel.MEMORY_AND_DISK)
@@ -448,10 +451,10 @@ def minhash_lsh_dedup(
         F.col("jaccard") >= threshold
     )
 
-    # hybrid CC is the default (VERDICT r4 #4, refined by SCALE_r05):
-    # min-label probe rounds win on the tiny-diameter graphs near-dup
-    # verification produces (star contraction measured ~1.5-2x slower
-    # wall-clock there at every probed scale/regime), while the
+    # hybrid CC is the default: min-label probe rounds win on the
+    # tiny-diameter graphs near-dup verification produces (star
+    # contraction measured ~1.5-2x slower wall-clock there at every
+    # probed scale/regime), while the
     # contraction fallback on the quotient keeps O(log d) rounds for
     # adversarial chain topology — same (node, label=component-min)
     # contract either way, so results are identical
@@ -595,10 +598,10 @@ def connected_components_hybrid(
 ) -> DataFrame:
     """Adaptive CC: min-label propagation for up to ``probe_rounds``; if
     it converges (the overwhelmingly common near-dup case — clusters have
-    diameter ≤ 3), that IS the answer at min-label's cost, which every
-    1×/10× probe this repo has run shows is the cheapest round shape on
-    verified-pair edge lists (SCALE_r04/r05: star contraction pays
-    ~1.5-2× more wall-clock per probe on these tiny-diameter graphs).
+    diameter ≤ 3), that IS the answer at min-label's cost, which
+    measured as the cheapest round shape on verified-pair edge lists at
+    1× and 10× scale (star contraction paid ~1.5-2× more wall-clock on
+    these tiny-diameter graphs).
     If it does NOT converge — chain-like topology, where min-label would
     need O(diameter) rounds — the partial labels define a QUOTIENT graph
     (each edge maps to its endpoints' current labels; everything within
@@ -932,10 +935,11 @@ def prefix_filter_jaccard_join(
     three branches (frequencies, prefix, candidates) plus the verify
     join, and without the cache each branch re-runs the text scan +
     shingle explode — measured 12.5 → 6.7 s at sf0.1. The cached data
-    is linear in corpus shingles and spills to disk; entries are
-    released by Spark's ContextCleaner once the result frame is
-    unreferenced. Disable to trade CPU for zero cache footprint when
-    the corpus dwarfs cluster storage.
+    is linear in corpus shingles and spills to disk; the entries stay in
+    the session's cache manager until ``unpersist()`` or
+    ``clearCache()``, and a later build of the same plan reads them.
+    Disable to trade CPU for zero cache footprint when the corpus
+    dwarfs cluster storage.
     """
     if not 0.0 < threshold <= 1.0:
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")

@@ -241,6 +241,6 @@ def label_propagation(
         )
     # the final labels are materialized by the eager localCheckpoint above,
     # so the cached edge list is no longer needed — release it rather than
-    # accumulating cached plans across calls in one session (ADVICE r4)
+    # accumulating cached plans across calls in one session
     und.unpersist()
     return labels

@@ -43,10 +43,10 @@ def dense_ids(
     because both the per-bucket count and the final join re-evaluate it and
     the bucket assignment must not be recomputed differently between them.
     The returned frame still REFERENCES that cache, so it cannot be
-    unpersisted here; it is released when the session evicts it or on
-    ``spark.catalog.clearCache()`` (what tools/scale_probe.py does between
-    probes). Callers running many dense_ids builds in one long session
-    should clearCache() between builds."""
+    unpersisted here; the session's cache manager holds it until
+    ``unpersist()`` or ``spark.catalog.clearCache()``, and a later build
+    of the same plan reads it. Callers running many dense_ids builds in
+    one long session should clearCache() between builds."""
     d = (
         df.select(key)
         .where(F.col(key).isNotNull())

@@ -250,7 +250,7 @@ def decode_image(content: bytes) -> tuple[int, int, np.ndarray]:
         return w, h, px[:, :, :3]
     # full 4-byte TIFF magic (byte order + the 42): a 2-byte 'II'/'MM'
     # sniff would swallow unrelated formats into decode_tiff's ValueError
-    # instead of the directed NotImplementedError below (ADVICE r4)
+    # instead of the directed NotImplementedError below
     if content[:4] in (b"II*\x00", b"MM\x00*"):
         return imagecodec.decode_tiff(bytes(content))
     raise NotImplementedError(

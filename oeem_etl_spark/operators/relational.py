@@ -344,7 +344,9 @@ def weighted_quantile_bucketed(
     # histogram, target-bucket re-scan) — one parquet scan + persist of
     # the 3-narrow-column frame replaces three full scans/decodes
     # (guide §5: reuse > the few-MB-per-partition memory cost; at scale
-    # this is ~2% of the table width). ContextCleaner releases it.
+    # this is ~2% of the table width). The frame stays in the session's
+    # cache manager until unpersist() or clearCache(), and a later build
+    # of the same plan reads it.
     base = (
         df.where(v.isNotNull())
         .select(*g, v.alias("__v"), w.alias("__w"))

@@ -139,8 +139,9 @@ def grid_nn_join(
     # anti-join) the fallback's unresolved set — without a persist the
     # whole candidate join + aggregate executed twice (plan-verified:
     # 10 scans / duplicated exchanges in the k34 plan). One row per
-    # point, spillable; released by the ContextCleaner like the other
-    # pipeline intermediates.
+    # point, spillable; like the other pipeline intermediates it stays in
+    # the session's cache manager until unpersist() or clearCache(), and
+    # a later build of the same plan reads it.
     from pyspark.storagelevel import StorageLevel
 
     grid_best = grid_best.persist(StorageLevel.MEMORY_AND_DISK)

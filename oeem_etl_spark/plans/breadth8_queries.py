@@ -1637,7 +1637,7 @@ def k131_grid_quantile_bands(spark, sf_dir):
     )
     # 2023-12-31 .. 2024-02-01 inclusive at 4h steps: 32 days * 6
     # boundaries/day + 1 = 193, matching the oracle's generate_series
-    # exactly (ADVICE r8: the old 8*32+1=257 grid extended ~10 days past
+    # exactly (an 8*32+1=257 grid would extend ~10 days past
     # the oracle's and would silently diverge once events reach Feb).
     n_slots = 6 * 32 + 1
     grid = spark.range(n_slots).select(

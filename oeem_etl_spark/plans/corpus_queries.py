@@ -168,7 +168,7 @@ def l22_repetition_stats(spark, sf_dir):
 
 @query(
     "l20b_pack_no_straddle",
-    # PROMOTED from rows-only (VERDICT r4 #8): FFD IS SQL-expressible as a
+    # PROMOTED from rows-only: FFD IS SQL-expressible as a
     # list_reduce fold (the h19-soundex playbook, scaled up). Per source,
     # items sort (tokens DESC, doc_id ASC) and fold over a flat BIGINT
     # state [k, a_1..a_k, caps...]: acc[1]=items processed, acc[2:k+1]

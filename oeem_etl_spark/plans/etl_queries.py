@@ -100,7 +100,7 @@ def k3_resample_interval(spark, sf_dir):
     Note: both sides emit bucket as TIMESTAMP — Spark DateType would
     materialize as pandas `object` (datetime.date) against DuckDB DATE's
     datetime64[us], flipping the driver's dtype-sensitive hash (the k11
-    flap family, VERDICT r2).
+    flap family).
     """
     ev = T(spark, sf_dir, "events")
     out = resample_interval(

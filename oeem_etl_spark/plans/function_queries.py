@@ -135,8 +135,8 @@ def h4_datetime_funcs(spark, sf_dir):
         F.quarter("o_orderdate").alias("q"),
         # Date-valued outputs surface as TIMESTAMP_NTZ on both engines:
         # Spark DateType materializes as pandas `object` (datetime.date)
-        # while DuckDB DATE gives datetime64[us] — a driver-hash dtype flap
-        # (VERDICT r2). timestamp_ntz == datetime64[us] on both sides.
+        # while DuckDB DATE gives datetime64[us] — a driver-hash dtype
+        # flap. timestamp_ntz == datetime64[us] on both sides.
         F.date_trunc("month", "o_orderdate").cast("timestamp_ntz").alias("month_start"),
         F.datediff(F.col("o_orderdate").cast("date"), F.lit("1995-01-01").cast("date")).alias(
             "days_since"

@@ -1,4 +1,4 @@
-"""Hostile-text queries (VERDICT r6 task #8): the corpus fixtures are
+"""Hostile-text queries: the corpus fixtures are
 well-formed space-separated ASCII, but a real 100 TB crawl corpus leads
 with empty strings, NUL-adjacent bytes, 4-byte UTF-8, combining marks,
 fullwidth forms, and adversarial 100k-char single-token documents. Each
@@ -828,7 +828,7 @@ def x10_hostile_quality_signals(spark, sf_dir):
     survey="L8,J4,A5",
 )
 def x11_hostile_image_decode(spark, sf_dir):
-    """The hostile-BINARY tier (VERDICT r8 task #5): the x1-x10 idea —
+    """The hostile-BINARY tier: the x1-x10 idea —
     adversarial inputs with a full value oracle — driven through the
     image decode path. Six payload kinds per doc_id % 6: (0) a valid
     l8f-style two-tone RGBA PNG; (1) the same PNG truncated to half its

@@ -522,7 +522,7 @@ def l3b_ann_lsh_topk(spark, sf_dir):
 def l3c_ivf_topk(spark, sf_dir):
     """IVF-style probe search using per-label centroids.
 
-    ORACLE-checked since r6 (VERDICT r5 task #7): the centroid is the
+    ORACLE-checked: the centroid is the
     element-wise integer-micros SUM per label (cosine is scale-invariant,
     so probe ranking equals ranking against the mean — but the integer
     sum is exact and shuffle-order-independent), so probe selection,
@@ -761,8 +761,8 @@ def l11_token_count(spark, sf_dir):
 def l12_fingerprint(spark, sf_dir):
     """Winnowing fingerprints (k-shingle rolling min-hash, window 4) on
     the md5-derived hash family, so the DuckDB oracle reproduces every
-    fingerprint value (promoted from rows-only, VERDICT r3 task #3
-    pattern). The production xxhash64 family stays under
+    fingerprint value (promoted from rows-only). The production
+    xxhash64 family stays under
     tests/test_operators.py."""
     docs = T(spark, sf_dir, "documents")
     fp = text.fingerprint_winnow(docs, "doc_id", "text", hash_fn=_md5_int32)
@@ -905,7 +905,7 @@ def l8c_audio_decode(spark, sf_dir):
 
 @query(
     "l8d_frame_sample",
-    # PROMOTED from rows-only (VERDICT r4 #8): the whole chain —
+    # PROMOTED from rows-only: the whole chain —
     # concatenated-PPM demux, every-10th-frame sampling, re-decode,
     # per-frame features — is deterministic and closed-form. Doc d packs
     # n = 5 + d%20 frames of 2x2 solid fill (d+i)%256, so the sampled
@@ -1725,7 +1725,7 @@ def _l29b_sql(max_sz: int = 64, dim: int = 64, threshold: float = 0.35) -> str:
     survey="L2,L3,H8",
 )
 def l29b_semantic_dedup_bounded(spark, sf_dir):
-    """l29 with the skewed-cluster guard (VERDICT r2 #4): clusters above 64
+    """l29 with the skewed-cluster guard: clusters above 64
     members are locally re-split before pairing
     (clustering.kmeans_assign ``max_cluster_size``), bounding the O(n_c²)
     pair stage against a dominant cluster. At sf0.1 (2000×64-d) the guard
@@ -1734,7 +1734,7 @@ def l29b_semantic_dedup_bounded(spark, sf_dir):
     crossover where the O(n_c²) cut dominates is exactly the multi-GB
     skewed-corpus regime the guard exists for.
 
-    ORACLE-checked end to end since r6 (VERDICT r5 task #7): the hash-
+    ORACLE-checked end to end: the hash-
     stride seed draw is deterministic — _l29b_sql reproduces Spark's
     xxhash64(bigint) in DuckDB CTEs (single-lane XXH64, seed 42, verified
     bit-for-bit) and unrolls the re-split + dense renumber + pair stage,
@@ -2126,7 +2126,7 @@ def _l43b_sql(dim: int = 64, iters: int = 8, v_scale: int = 1_000_000) -> str:
 )
 def l43b_pca_power_fixed(spark, sf_dir):
     """Fixed-point power-iteration PCA — the oracle-checked twin of l43
-    (VERDICT r5 #7, the l45b playbook): one exact-integer moment pass
+    (the l45b playbook): one exact-integer moment pass
     (mapInPandas int64 partials — integer sums are shuffle-order-
     independent), 8 driver-side power-iteration rounds on the integer
     scaled covariance with integer renormalization, and a JVM-literal
@@ -2319,8 +2319,8 @@ def l45_image_phash_dedup(spark, sf_dir):
     survey="L8,L2,J4",
 )
 def l45b_phash_fixed_oracle(spark, sf_dir):
-    """l45's hashing chain made value-checkable (VERDICT r4 #8, the
-    l2d/l2e quantized-twin playbook): the SAME byte-identical planted-twin
+    """l45's hashing chain made value-checkable (the l2d/l2e
+    quantized-twin playbook): the SAME byte-identical planted-twin
     corpus (shared fixture generator) decoded through the real PPM path,
     hashed with multimodal.phash64_fixed — the all-integer DCT pHash —
     and the 64-bit signatures themselves compared against a DuckDB oracle
@@ -2697,7 +2697,7 @@ def l50_neardup_canonical(spark, sf_dir):
     edges = dedup.prefix_filter_jaccard_join(docs, "doc_id", "text", 0.5).select(
         "key_a", "key_b"
     )
-    # hybrid CC (VERDICT r4 #4 refined by SCALE_r05): min-label probe
+    # hybrid CC: min-label probe
     # rounds (the measured winner on tiny-diameter near-dup graphs) with
     # a star-contraction fallback on the quotient for chain topology;
     # identical labels either way
@@ -2943,7 +2943,7 @@ def l9b_embed_hash_oracle(spark, sf_dir):
 
 @query("l8j_webp_lossy_decode", sql=None, tier="T3", survey="L8,J4")
 def l8j_webp_lossy_decode(spark, sf_dir):
-    """Lossy-WebP (VP8 keyframe) decode — VERDICT r3 task #4: per doc a
+    """Lossy-WebP (VP8 keyframe) decode: per doc a
     deterministic gradient image is encoded BOTH lossless (VP8L) and
     lossy (VP8, quantizer varying by doc), both payloads decode through
     the same container dispatch (multimodal.decode_image ->

@@ -54,10 +54,9 @@ def q01_pricing_summary(spark, sf_dir):
     li = T(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     charge = disc_price * (1 + F.col("l_tax"))
-    # r10 (VERDICT r9 #1): this SEVEN-aggregate battery is the one site
-    # where the primitive qlong form measured SLOWER than F.round at 32
-    # threads (interleaved A/B, both probes: round 0.34/0.60 s min vs
-    # qlong 0.48/0.79 — artifacts/QLONG_AB_R10.json, QLONG_AB2_R10.json);
+    # this SEVEN-aggregate battery is the one site where the primitive
+    # qlong form measured SLOWER than F.round at 32 threads (two
+    # interleaved A/Bs: round 0.34/0.60 s min vs qlong 0.48/0.79);
     # single-site queries keep qlong (q02 A/B: qlong wins there).
     q = dict(quantizer="round")
     return (

@@ -130,15 +130,13 @@ def _micros(col: Column | str, scale: int, quantizer: str) -> Column:
 
     - ``"qlong"`` (default): the primitive floor(+0.5)+overshoot-correct
       arithmetic — ~20 primitive expression nodes per value, the winner
-      in row-projection contexts (r9 probe; r10 q02 A/B: 0.54 vs 0.62 s
-      min, artifacts/QLONG_AB2_R10.json).
+      in row-projection contexts (q02 A/B: 0.54 vs 0.62 s min).
     - ``"round"``: ``F.round(x·m).cast("long")`` — one compact call per
       value. The winner when MANY quantized aggregates share one
       HashAggregate update (r10 q01 A/B, 7 aggregates at 32 threads:
       round 0.34/0.60 s min vs qlong 0.48/0.79 across two interleaved
-      probes, artifacts/QLONG_AB{,2}_R10.json — the wide qlong battery
-      bloats the generated update past what JIT digests; with 1
-      aggregate the forms tie, t05 in the same artifact).
+      A/Bs — the wide qlong battery bloats the generated update past
+      what JIT digests; with 1 aggregate the forms tie, as on t05).
     """
     if quantizer == "round":
         return F.round(_col(col) * F.lit(10**scale)).cast("long")

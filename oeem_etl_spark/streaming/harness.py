@@ -89,7 +89,7 @@ def foreach_batch_capture(sdf: DataFrame, path: str, timeout_s: int = 300) -> No
     operators re-emit a key's row every batch it changes in; the sink's
     consumer must keep the LAST batch's row per key — the memory sink
     loses that ordering, so tie-breaking on payload columns silently
-    depends on single-batch drains (ADVICE r7 #1). With the ordinal
+    depends on single-batch drains. With the ordinal
     recorded, "final emission per key" is ``max(_batch_id)`` regardless
     of how many micro-batches the source drains in."""
     ckpt = _mkdtemp_ckpt("oeem_ckpt_cap_")

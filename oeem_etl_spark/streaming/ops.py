@@ -26,7 +26,7 @@ def quantize_micros(v):
     .xx...5 ties). Takes anything array-like, returns an int64 ndarray.
     Non-finite inputs are the caller's contract: sum paths must drop them
     first via :func:`sum_micros` (astype('int64') silently maps NaN to
-    INT64_MIN — ADVICE r8)."""
+    INT64_MIN)."""
     import numpy as np
 
     a = np.asarray(v, dtype="float64")
@@ -184,7 +184,7 @@ def latest_state(
     winner is max (ts, id, quantized value) — the id tiebreak makes
     replays deterministic, and the value extends the key so even
     duplicate (ts, id) rows with different values resolve independently
-    of batch row order (ADVICE r8: a 2-level key left the full-tie case
+    of batch row order (a 2-level key would leave the full-tie case
     to lexsort stability, i.e. arrival order). The state is three scalars
     per key, idempotent under replay. Values are assumed finite (meter
     readings); a NaN value would quantize to INT64_MIN and lose to any
@@ -210,9 +210,9 @@ def latest_state(
             ids = pdf[id_col].to_numpy("int64")
             m = quantize_micros(pdf[value_col].to_numpy("float64"))
             # vectorized lexicographic argmax over (ts, id, micros) — no
-            # per-row Python in the batch loop (VERDICT r7 "what's wrong"
-            # #2); micros in the key makes full-(ts,id)-tie resolution
-            # order-independent rather than lexsort-stability-dependent
+            # per-row Python in the batch loop; micros in the key makes
+            # full-(ts,id)-tie resolution order-independent rather than
+            # lexsort-stability-dependent
             i = int(np.lexsort((m, ids, t))[-1])
             cand = (int(t[i]), int(ids[i]), int(m[i]))
             if ts_us is None or cand > (ts_us, best_id, micros):
@@ -287,7 +287,7 @@ def running_totals_tws(df: DataFrame, key: str = "user_id", value_col: str = "va
             for pdf in rows:
                 n += len(pdf)
                 # same half-away-from-zero quantization as the v1 paths
-                # (VERDICT r8 task #4: pandas .round(0) is half-to-even)
+                # (pandas .round(0) is half-to-even)
                 micros += sum_micros(pdf[value_col].to_numpy("float64"))
             self._state.update((int(n), int(micros)))
             yield pd.DataFrame(

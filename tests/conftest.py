@@ -21,13 +21,10 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_session("oeem-etl-spark-tests")
     # Tests run with the library's own SQL settings (session.configure:
     # AQE on, core-count shuffle partitions), the same ones every
-    # load_table caller gets; only scan splits are sized for the MB-scale
-    # fixtures.
-    s.conf.set("spark.sql.files.maxPartitionBytes", str(4 * 1024 * 1024))
-    return s
+    # load_table caller gets.
+    return get_session("oeem-etl-spark-tests")
 
 
 @pytest.fixture(scope="session")

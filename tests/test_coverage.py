@@ -42,8 +42,8 @@ def test_order_prefix_covers_all_tags():
 
 
 def test_order_prefix_rotates():
-    # VERDICT r3 task #1: each round's 50-prefix must certify queries the
-    # driver has never checked (ledger: tools/driver_checked.json).
+    # each round's 50-prefix must certify queries the driver has never
+    # checked (ledger: tools/driver_checked.json).
     import json
     from pathlib import Path
 
@@ -59,7 +59,7 @@ def test_order_prefix_rotates():
 
 
 def test_query_id_prefix_unique():
-    # VERDICT r6 "What's wrong" #2: the id-prefix convention is one id
+    # the id-prefix convention is one id
     # (the token before the first underscore, e.g. "c71", "l8k") per
     # query. Two queries sharing an id silently broke the convention in
     # r6 (c61_*); keep it enforced so tooling can assume uniqueness.

@@ -189,7 +189,7 @@ def test_upload_foreach_batch_stream(spark, tmp_path):
     assert got == [("A", 1.5), ("A", 2.5), ("B", 4.0), ("C", 0.5), ("C", 1.0)]
 
 
-# --- VERDICT r4 task #8: failure injection at 100+ tasks ---------------------
+# --- failure injection at 100+ tasks ----------------------------------------
 
 
 def test_fetch_120_tasks_partial_failure_then_replay(spark, tmp_path):

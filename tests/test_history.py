@@ -37,7 +37,7 @@ def test_scd2_tied_timestamps_deterministic_valid_to(spark):
     orders them into distinct versions): the lead() that assigns valid_to
     must order by (valid_from, version), so version 1 deterministically
     gets the empty interval and version 2 survives as the live row —
-    regardless of shuffle order (ADVICE r2: orderBy valid_from alone left
+    regardless of shuffle order (orderBy valid_from alone would leave
     this nondeterministic)."""
     rows = [
         (1, _ts(1), "a", 10),

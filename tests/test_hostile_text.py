@@ -1,4 +1,4 @@
-"""Hostile-text sweep (VERDICT r6 task #8): the operator paths a crawl
+"""Hostile-text sweep: the operator paths a crawl
 corpus stresses first — xxh64 bytes, shingles, BPE, substring dedup —
 driven with empty strings, NULs, 4-byte UTF-8, combining marks, and
 100k-char single-token docs. The registry twins live in

@@ -197,7 +197,7 @@ def test_hilbert_prunes_box_queries_better_than_zorder(spark):
 def test_hilbert_rejects_64bit_overflow(spark):
     """bits > 31 puts the [0, 4^bits) Hilbert key past signed-64 — both
     the DataFrame and SQL builders must refuse loudly (same contract as
-    zorder's _check_width; ADVICE r5)."""
+    zorder's _check_width)."""
     import pytest
 
     from oeem_etl_spark.operators.layout import sql_hilbert_cte, with_hilbert_key

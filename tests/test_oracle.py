@@ -77,7 +77,7 @@ def _spark_pandas_kind(dtype) -> str:
 
     DateType and DecimalType become `object` (datetime.date / Decimal
     instances) — NOT datetime64/float64 — which is the root of the
-    driver-hash dtype flaps (k11 family, VERDICT r2)."""
+    driver-hash dtype flaps (k11 family)."""
     from pyspark.sql import types as S
 
     if isinstance(dtype, (S.ByteType, S.ShortType, S.IntegerType, S.LongType)):
@@ -137,7 +137,7 @@ def test_oracle_match(name, spark, duck, sf_dir):
     q = ALL[name]
     sdf = q.fn(spark, sf_dir)
 
-    # Driver-canonicalizer gate (VERDICT r4 task #2): the driver hashes
+    # Driver-canonicalizer gate: the driver hashes
     # results through pandas (name-sorted columns -> sort_values over all
     # columns -> value hash), and Array/Map/Struct cells materialize as
     # numpy.ndarray / dict / Row — unhashable/unorderable there (how

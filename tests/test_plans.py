@@ -612,7 +612,7 @@ def _plan_bounds():
 
 @pytest.mark.parametrize("name", sorted(_plan_bounds()))
 def test_headline_plan_within_recorded_bounds(spark, sf_dir, name):
-    """VERDICT r6 task #5 — the plan audit as a GATE, not an artifact:
+    """The plan audit as a GATE, not an artifact:
     every headline query's STATIC plan must stay within the structural
     bounds committed in tools/plan_bounds.json — no new Python eval
     nodes, shuffle-exchange count <= the recorded value, every parquet
@@ -637,6 +637,23 @@ def test_headline_plan_within_recorded_bounds(spark, sf_dir, name):
         assert s["max_cols"] <= ref["max_cols"], (table, s, ref)
         if ref["has_filters"]:
             assert s["has_filters"], f"pushed filters lost on {table}"
+
+
+def test_bounds_set_matches_recorded_bounds():
+    """`plan_audit.py --bounds` records exactly BOUNDS_SET, so the set and
+    tools/plan_bounds.json must name the same registered queries, once
+    each: a name added to one side only is a query whose plan no gate
+    checks."""
+    import sys
+    from pathlib import Path
+
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
+    from plan_audit import BOUNDS_SET
+
+    assert len(BOUNDS_SET) == len(set(BOUNDS_SET)), BOUNDS_SET
+    assert set(BOUNDS_SET) == set(_plan_bounds())
+    missing = set(BOUNDS_SET) - set(registry.all_queries())
+    assert not missing, f"unregistered BOUNDS_SET names: {sorted(missing)}"
 
 
 def test_label_propagation_rounds_are_checkpoint_backed(spark, sf_dir):

@@ -273,7 +273,7 @@ def test_scd2_current_rows_equal_keep_latest(spark, rows):
 
 
 # Nullable values: updates that set a column to NULL must emit NULL (a
-# coalesce(new, old) projection would leak the stale old value — ADVICE r1).
+# coalesce(new, old) projection would leak the stale old value).
 nullable_kv_rows = st.lists(
     st.tuples(
         st.integers(0, 5),

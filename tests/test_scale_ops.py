@@ -168,7 +168,7 @@ def test_cc_contraction_matches_label_propagation(spark, sf_dir):
 
 
 def test_cc_contraction_path_graph_log_rounds(spark, sf_dir):
-    # VERDICT r3 task #5: a 10k-node path is the worst case for one-hop
+    # a 10k-node path is the worst case for one-hop
     # min-label propagation (O(diameter) = 10k rounds); the contraction
     # variant must finish in O(log n) — assert a generous log bound and
     # that every node labels to the path minimum (0).

@@ -100,8 +100,8 @@ def test_srp_ann_recovers_planted_neighbors(spark):
 
 
 def test_srp_ann_recall_on_anisotropic_corpus(spark):
-    """Recall gate for the SRP path, the analogue of PQ's >=0.8 gate
-    (VERDICT r5 task #5): on a corpus WITH angular signal — 8 clustered
+    """Recall gate for the SRP path, the analogue of PQ's >=0.8 gate:
+    on a corpus WITH angular signal — 8 clustered
     directions, per-vector noise 0.02 so intra-cluster angles stay well
     inside the 16-bit sketch's resolution (expected Hamming ~ bits*theta/pi
     must sit under max_hamming=4) — SRP-ANN at the documented settings

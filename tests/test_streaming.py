@@ -386,7 +386,7 @@ def test_python_stream_source_incremental_offsets(spark, tmp_path):
 
 
 def test_latest_state_multi_batch_capture(spark, tmp_path):
-    """I6 last-write face under a MULTI-batch drain (ADVICE r7 #1): the
+    """I6 last-write face under a MULTI-batch drain: the
     winner is max(ts, event_id), so a later batch can re-emit a key at the
     SAME last_ts with a SMALLER value. 'Final emission per key' must come
     from the batch ordinal (foreach_batch_capture), not a payload-column
@@ -403,7 +403,7 @@ def test_latest_state_multi_batch_capture(spark, tmp_path):
     )
     schema = "id long, user_id long, ts timestamp"
     # Values sit on exact half-micro boundaries, which also pins the
-    # half-AWAY-from-zero micros quantization (ADVICE r7 #2): 9.0000005 ->
+    # half-AWAY-from-zero micros quantization: 9.0000005 ->
     # 9.000001 (numpy half-to-even would give 9.0) and 0.0000025 -> 3e-06
     # (half-to-even would give 2e-06).
     sdf = (
@@ -520,7 +520,7 @@ def test_session_append_merges_across_batches(spark, tmp_path):
 
 
 def test_quantize_micros_half_away_from_zero():
-    """VERDICT r8 task #4: ONE quantization form across all state paths.
+    """ONE quantization form across all state paths.
     The helper must round .5 ties AWAY from zero (Spark/DuckDB ROUND),
     where numpy .round / pandas .round(0) go half-to-even — 0.0000005
     and 1.5e-6-style ties are exactly where the old TWS/extremes
@@ -536,7 +536,7 @@ def test_quantize_micros_half_away_from_zero():
 
 
 def test_sum_micros_skips_non_finite():
-    """ADVICE r8 + r9 review: astype('int64') maps NaN to INT64_MIN
+    """astype('int64') maps NaN to INT64_MIN
     silently; the sum paths skip NULL/NaN like SQL SUM, while inf — a
     genuine un-quantizable value, not a missing one — raises loudly."""
     import numpy as np
@@ -589,7 +589,7 @@ def test_extremes_state_skips_nan(spark, tmp_path):
 
 
 def test_latest_state_tie_break_order_independent(spark, tmp_path):
-    """ADVICE r8: on a FULL (ts, id) tie with different values, the winner
+    """On a FULL (ts, id) tie with different values, the winner
     must not depend on batch row order. The 3-level lexsort key
     (ts, id, micros) picks the max quantized value deterministically."""
     rows_a = [

@@ -4,7 +4,7 @@ The driver compares Spark vs DuckDB results through pandas with a
 dtype-sensitive value hash, so a value-identical result can still go red
 when the two sides materialize with different numpy *kinds* — the classic
 case being a DuckDB windowed ``SUM`` (HUGEINT → float64) against Spark's
-int64 (the round-2 ``k11_sessionize`` flap, VERDICT r2 "What's wrong").
+int64 (as ``k11_sessionize`` once did).
 ``repr``-based compares (tools/verify_all.py) miss this because DuckDB's
 ``fetchall()`` yields Python ints for HUGEINT; only the pandas path shows it.
 

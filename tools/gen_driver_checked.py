@@ -3,9 +3,8 @@ driver's CORRECTNESS_r{N}.json contained a row for it.
 
 The driver hash-checks only the first 50 names ``queries()`` yields, so
 this file is the rotation ledger: tools/gen_order.py prefers queries with
-no prior driver check when regenerating plans/query_order.py (VERDICT r3
-task #1). Regenerate at the start of each round, after the driver drops
-the new CORRECTNESS artifact:
+no prior driver check when regenerating plans/query_order.py.
+Regenerate after each new driver CORRECTNESS record:
 
     python tools/gen_driver_checked.py && python tools/gen_order.py
 """
@@ -18,9 +17,9 @@ from pathlib import Path
 
 REPO = Path(__file__).resolve().parents[1]
 
-# Queries renamed after a driver check (r7: id-prefix uniqueness sweep,
-# VERDICT r6 "What's wrong" #2). The CORRECTNESS_r{N}.json artifacts keep
-# the historical name; map it forward so certification history carries.
+# Queries renamed after a driver check (the id-prefix uniqueness sweep).
+# The CORRECTNESS_r{N}.json records keep the historical name; map it
+# forward so certification history carries.
 RENAMES = {
     "a16_schema_evolution": "a34_schema_evolution",
     "a17_csv_dim_enrich": "a35_csv_dim_enrich",

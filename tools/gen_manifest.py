@@ -1,7 +1,7 @@
 """Generate tools/rows_only_manifest.json: the driver-consumable list of
 queries that deliberately ship no DuckDB oracle, with machine-readable
 reason codes — so a CORRECTNESS row with ``err: "no_oracle"`` is
-distinguishable from breakage (VERDICT r3 "What's wrong" (a)).
+distinguishable from breakage.
 
 The reason map below is the single source of truth; the script asserts it
 EXACTLY matches the registry's ``sql=None`` set, so a promotion (query

@@ -6,7 +6,7 @@ rounds running). Two goals compete for those 50 slots:
 
 1. **Tag coverage** — every SURVEY §2 tag must appear in the prefix, so
    one driver round certifies the full operator surface.
-2. **Rotation** (VERDICT r3 task #1) — prefer queries with no prior
+2. **Rotation** — prefer queries with no prior
    driver check (tools/driver_checked.json, regenerated each round by
    tools/gen_driver_checked.py), so repeated rounds certify the whole
    registry instead of re-checking the same 50.
@@ -40,18 +40,10 @@ sys.path.insert(0, str(REPO))
 WARMUP_OVERRIDES = {"q01_pricing_summary": 0.4}  # first-run JVM warm-up excluded
 PREFIX = 50  # the driver's observed per-round certification cap
 
-# Queries that MUST occupy a prefix slot this round regardless of the
-# rotation ledger — e.g. a query whose prior driver check ERRED and needs
-# re-certification (h19 in r5, since re-certified green). r6: every
-# rows-only -> oracle promotion gets a slot so its new oracle is
-# driver-certified the same round it lands (l29b/l3c early-r6; l2/l31b/
-# i10 via the xxh64-in-SQL machinery plus the new l43b twin, late-r6).
-# r7: the five hostile-text queries (VERDICT r6 task #8) land this round
-# and get driver-certified the round they land; all five are themselves
-# never-driver-checked, so the rotation target (>=45 first-timers) is
-# unaffected. r8: x1-x5 are now driver-certified (CORRECTNESS_r07) —
-# cleared per VERDICT r7 task #1; the new x6-x9 hostile queries are
-# never-checked so rotation picks them naturally without forcing.
+# Queries that MUST occupy a prefix slot regardless of the rotation
+# ledger — e.g. a query whose prior driver check ERRED and needs
+# re-certification, or a rows-only -> oracle promotion whose new oracle
+# should be driver-certified as soon as it lands.
 FORCE_INCLUDE: list[str] = []
 
 

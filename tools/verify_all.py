@@ -6,7 +6,6 @@ Usage:
     python tools/verify_all.py                 # sf0.01 (the driver's gate)
     python tools/verify_all.py sf0.001 sf0.1   # other/multiple sf dirs
     python tools/verify_all.py sf0.01 --only k13,l2   # substring filter
-    python tools/verify_all.py sf0.01 --artifact CORRECTNESS_LOCAL_r03.json
 
 Exit code 0 iff every oracle query matches (row count + repr-sorted
 values) and every rows-only query executes. Known benign repr diff: none —
@@ -34,11 +33,6 @@ def main() -> int:
     if "--only" in argv:
         i = argv.index("--only")
         only = argv[i + 1].split(",")
-        argv = argv[:i] + argv[i + 2 :]
-    artifact: str | None = None
-    if "--artifact" in argv:
-        i = argv.index("--artifact")
-        artifact = argv[i + 1]
         argv = argv[:i] + argv[i + 2 :]
     sfs = argv or ["sf0.01"]
     repo = Path(__file__).resolve().parents[1]
@@ -90,61 +84,29 @@ def main() -> int:
                 f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
             )
         bad = []
-        results: dict[str, dict] = {}
         for name in sorted(osql):
             try:
                 s = sorted(
                     map(repr, [tuple(r) for r in qs[name](spark, sf_dir).collect()])
                 )
                 d = sorted(map(repr, [tuple(r) for r in con.sql(osql[name]).fetchall()]))
-                ok = len(s) == len(d) and s == d
-                results[name] = {
-                    "check": "oracle",
-                    "rows_match": len(s) == len(d),
-                    "value_match": ok,
-                    "spark_rows": len(s),
-                    "oracle_rows": len(d),
-                    "err": None,
-                }
-                if not ok:
+                if s != d:
                     bad.append(name)
                     print(f"{sf}: {name} MISMATCH {len(s)} vs {len(d)}")
             except Exception as e:  # noqa: BLE001 — report-and-continue sweep
                 bad.append(name)
-                results[name] = {"check": "oracle", "err": str(e)[:300]}
                 print(f"{sf}: {name} ERROR {str(e)[:200]}")
         for name in sorted(set(qs) - set(osql)):
             try:
-                n = qs[name](spark, sf_dir).count()
-                results[name] = {"check": "rows_only", "spark_rows": n, "err": None}
+                qs[name](spark, sf_dir).count()
             except Exception as e:  # noqa: BLE001
                 bad.append(name)
-                results[name] = {"check": "rows_only", "err": str(e)[:300]}
                 print(f"{sf}: {name} (rows-only) ERROR {str(e)[:200]}")
         print(
             f"{sf}: {len(osql)} oracle + {len(qs) - len(osql)} rows-only checked;"
             f" failures: {bad or 'none'}"
         )
         failures += len(bad)
-        if artifact:
-            import datetime
-            import json
-
-            out = {
-                "_meta": {
-                    "sf": sf,
-                    "date": datetime.date.today().isoformat(),
-                    "method": "tools/verify_all.py repr-sorted value compare "
-                    "(stricter than the driver hash); rows-only = executes",
-                    "n_oracle": len(osql),
-                    "n_rows_only": len(qs) - len(osql),
-                    "failures": sorted(bad),
-                },
-                **results,
-            }
-            path = repo / artifact if "/" not in artifact else Path(artifact)
-            path.write_text(json.dumps(out, indent=1) + "\n")
-            print(f"{sf}: artifact written to {path}")
         con.close()
     return 1 if failures else 0
 
