@@ -14,6 +14,11 @@ Design stance (SURVEY.md §3–§4):
 - No RDDs, no ``collect()`` in library code paths, no driver-side row loops.
 - Python UDFs only where built-ins genuinely cannot express the semantics,
   and then always Arrow-vectorized (pandas_udf / applyInPandas / mapInPandas).
+- Driver-side rows become a frame only through ``catalog.local_frame``,
+  which ships them as Arrow and plans a ``LocalRelation``.
+  ``createDataFrame`` over a Python list pickles an RDD whose Python
+  ``map`` costs a Spark job plus a pyspark daemon and a worker per core
+  (350 MB on 4 cores).
 - Streaming uses Structured Streaming over the same transformations so
   batch-equivalence is checkable.
 """

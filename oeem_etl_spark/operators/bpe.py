@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from oeem_etl_spark.catalog import local_frame
+
 END_MARK = "</w>"  # end-of-word symbol, per the original formulation
 
 # Pre-tokenization shared with the DuckDB oracle: lowercase, keep [a-z]+
@@ -213,7 +215,8 @@ def bpe_train(
         wf = word_freq(docs, text_col, top_words, max_word_len)
         rows = [(r["word"], int(r["freq"])) for r in wf.collect()]
         merges, final = _train_rounds_py(rows, n_merges)
-        words_df = docs.sparkSession.createDataFrame(
+        words_df = local_frame(
+            docs.sparkSession,
             final, "word string, freq bigint, syms array<string>"
         )
         return merges, words_df

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from oeem_etl_spark.catalog import local_frame
 from oeem_etl_spark.functions.fixedpoint import qlong
 
 from oeem_etl_spark.operators.text import ngrams_from_tokens, tokenize
@@ -141,7 +142,8 @@ def stratified_mixture_sample(
     validate counts first; an exact mixture with a missing stratum would
     otherwise force an empty sample.
     """
-    w_df = df.sparkSession.createDataFrame(
+    w_df = local_frame(
+        df.sparkSession,
         [(s, float(w)) for s, w in sorted(weights.items())],
         f"{stratum_col} STRING, __wt DOUBLE",
     )

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from oeem_etl_spark.catalog import local_frame
 from oeem_etl_spark.operators.relational import dedupe_keep_latest_by
 
 
@@ -586,7 +587,7 @@ def _driver_union_find(pairs: DataFrame, rows, stats: dict | None) -> DataFrame:
             StructField("label", fields["key_a"].dataType, True),
         ]
     )
-    return spark.createDataFrame(out, schema)
+    return local_frame(spark, out, schema)
 
 
 def connected_components_hybrid(

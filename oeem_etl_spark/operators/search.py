@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from oeem_etl_spark.catalog import local_frame
+
 
 def build_postings(
     docs: DataFrame, key: str = "doc_id", text_col: str = "text"
@@ -68,7 +70,8 @@ def phrase_search(
     group on (key, anchor = pos - slot) and demand all slots present."""
     spark = postings.sparkSession
     n = len(phrase)
-    slots = spark.createDataFrame(
+    slots = local_frame(
+        spark,
         [(t, i) for i, t in enumerate(phrase)], "term string, slot int"
     )
     votes = (

@@ -14,9 +14,11 @@ from __future__ import annotations
 import os
 import tempfile
 
+import pandas as pd
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from oeem_etl_spark.catalog import local_frame
 from oeem_etl_spark.plans.registry import query
 from oeem_etl_spark.plans.util import T, dsum, sql_dsum
 
@@ -151,7 +153,8 @@ def a43_catalog_set_algebra(spark, sf_dir):
     types, pushed through INTERSECT and UNION DISTINCT and labeled per
     branch — the set-algebra face over a mixed literal/scan pair, where
     a32/g9 used homogeneous table sides."""
-    expected = spark.createDataFrame(
+    expected = local_frame(
+        spark,
         [("view",), ("click",), ("purchase",), ("signup",), ("error",),
          ("refund",)],
         "event_type string",
@@ -215,7 +218,8 @@ def a44_fetch_upload_by_lang(spark, sf_dir):
         for f in os.listdir(remote)
         if f.endswith(".csv") and not f.startswith(("_", "."))
     )
-    tasks = spark.createDataFrame(
+    tasks = local_frame(
+        spark,
         [(s, s) for s in shards], "task_id string, uri string"
     )
     ffactory = functools.partial(
@@ -249,7 +253,7 @@ def a44_fetch_upload_by_lang(spark, sf_dir):
         (str(v["lang"]), int(v["n_docs"]), int(v["total_chars"]))
         for v in state.values()
     ]
-    return spark.createDataFrame(rows, "lang string, n_docs long, total_chars long")
+    return local_frame(spark, rows, "lang string, n_docs long, total_chars long")
 
 
 # ---------------------------------------------------------------------------
@@ -435,7 +439,8 @@ def c41_maintenance_overlap(spark, sf_dir):
             (F.col("ts") + F.expr("INTERVAL 30 MINUTES")).alias("e"),
         )
     )
-    mw = spark.createDataFrame(
+    mw = local_frame(
+        spark,
         [
             ("patch-a", "2024-01-05 00:00:00", "2024-01-05 12:00:00"),
             ("patch-b", "2024-01-14 18:00:00", "2024-01-15 06:00:00"),
@@ -873,12 +878,13 @@ def j32_pandas_udf_whitespace(spark, sf_dir):
     (pandas .str ops over the whole batch — no per-row Python loop,
     unlike a scalar UDF): collapse runs of spaces and trim; the removed
     count proves character-exact equivalence with the SQL regexp."""
-    import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("string")
-    # bare signature: this module uses `from __future__ import
-    # annotations`, which stringifies hints pandas_udf can't resolve
+    # bare signature. This module uses `from __future__ import
+    # annotations`, so a hint is a string that pandas_udf resolves against
+    # the module's globals: a hint must name the module-level `pd`, never
+    # a function-local import
     def squeeze(s):
         return s.str.replace(" +", " ", regex=True).str.strip()
 
@@ -907,13 +913,12 @@ def j33_grouped_agg_rms(spark, sf_dir):
     reduction where numpy does the whole group in one call. Five groups
     of ~N/5 doubles: summation-order differences live below the 1e-6
     rounding."""
-    import pandas as pd  # noqa: F401
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
-    # explicit GROUPED_AGG: the bare signature (see j32 note) removes the
-    # annotation Spark would otherwise infer the UDF kind from
-    @pandas_udf("double", PandasUDFType.GROUPED_AGG)
-    def rms(v):
+    # Series -> scalar hints make this a grouped-agg UDF; they resolve
+    # against the module-level pandas import (see the j32 note)
+    @pandas_udf("double")
+    def rms(v: pd.Series) -> float:
         import numpy as np
 
         return float(np.sqrt(np.mean(np.square(v.to_numpy()))))
@@ -1424,8 +1429,7 @@ def j41_udf_trifecta(spark, sf_dir):
     features, then a grouped-agg pandas UDF (RMS — J5) reduces them per
     language. Each step pays the Python tax exactly once over Arrow
     batches; everything around them stays JVM."""
-    import pandas as pd  # noqa: F401
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
     def vowel_count(s):
         return sum(1 for ch in (s or "").lower() if ch in "aeiou")
@@ -1436,8 +1440,8 @@ def j41_udf_trifecta(spark, sf_dir):
     def squeeze(s):  # bare signature, see j32 note on future-annotations
         return s.str.replace(" +", " ", regex=True).str.strip()
 
-    @pandas_udf("double", PandasUDFType.GROUPED_AGG)
-    def rms(v):
+    @pandas_udf("double")
+    def rms(v: pd.Series) -> float:  # grouped-agg, from the hints
         import numpy as np
 
         return float(np.sqrt(np.mean(np.square(v.to_numpy(dtype="float64")))))
@@ -1560,7 +1564,8 @@ def a45_fetch_csv_normalize(spark, sf_dir):
         for f in os.listdir(remote)
         if f.endswith(".csv") and not f.startswith(("_", "."))
     )
-    tasks = spark.createDataFrame(
+    tasks = local_frame(
+        spark,
         [(s, s) for s in shards], "task_id string, uri string"
     )
     ffactory = functools.partial(
@@ -1611,7 +1616,8 @@ def a45_fetch_csv_normalize(spark, sf_dir):
         )
         for v in state.values()
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows, "language string, lang_uc string, n_docs long, total_chars long"
     )
 

@@ -16,6 +16,7 @@ import tempfile
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from oeem_etl_spark.catalog import local_frame
 from oeem_etl_spark.plans.registry import query
 from oeem_etl_spark.plans.util import T, dsum, sql_dsum
 
@@ -100,7 +101,8 @@ def a52_outer_catalog_audit(spark, sf_dir):
     reconciliation-report shape (c2's face was table↔table; a52 is
     literal↔scan and exercises both unmatched directions via the
     planted 'refund' row)."""
-    expected = spark.createDataFrame(
+    expected = local_frame(
+        spark,
         [("view", 5000), ("click", 3000), ("purchase", 800),
          ("signup", 400), ("error", 200), ("refund", 50)],
         "event_type string, quota int",
@@ -299,7 +301,8 @@ def c51_active_period_asof(spark, sf_dir):
     periods = ev.groupBy(
         "user_id", F.date_trunc("day", F.col("ts")).alias("day")
     ).agg(F.min("ts").alias("p_start"), F.max("ts").alias("p_end"))
-    mw = spark.createDataFrame(
+    mw = local_frame(
+        spark,
         [
             ("week1", "2024-01-01 00:00:00", "2024-01-08 00:00:00"),
             ("week3", "2024-01-15 00:00:00", "2024-01-22 00:00:00"),

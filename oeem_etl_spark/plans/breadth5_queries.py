@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from oeem_etl_spark.catalog import local_frame
 from oeem_etl_spark.plans.registry import query
 from oeem_etl_spark.plans.util import T, dsum, sql_dsum
 
@@ -71,7 +72,8 @@ def c71_inline_window_asof(spark, sf_dir):
     order (C8 semantics expressed as the standard latest-row window) and
     a per-window rollup. Small dim side stays a broadcast; the order
     side never shuffles more than the matched rows."""
-    w = spark.createDataFrame(
+    w = local_frame(
+        spark,
         [(i, s, e, p) for (i, s, e, p) in _C71_WINDOWS],
         "win_id int, win_start string, win_end string, min_price double",
     ).select(

@@ -16,9 +16,11 @@ from __future__ import annotations
 import os
 import tempfile
 
+import pandas as pd
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from oeem_etl_spark.catalog import local_frame
 from oeem_etl_spark.plans.registry import query
 from oeem_etl_spark.plans.util import T
 
@@ -86,7 +88,8 @@ def a54_fetch_events_csv_roundtrip(spark, sf_dir):
         for f in os.listdir(remote)
         if f.endswith(".csv") and not f.startswith(("_", "."))
     )
-    tasks = spark.createDataFrame(
+    tasks = local_frame(
+        spark,
         [(s, s) for s in shards], "task_id string, uri string"
     )
     ffactory = functools.partial(
@@ -128,7 +131,8 @@ def a54_fetch_events_csv_roundtrip(spark, sf_dir):
         (str(v["kind"]), int(v["n_events"]), int(v["total_micros"]))
         for v in state.values()
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows, "kind string, n_events bigint, total_micros bigint"
     )
 
@@ -286,8 +290,7 @@ def j50_udf_quartet(spark, sf_dir):
     reduces the word counts to an exact int64 sum of squares per brand
     (J5 — integer, so no accumulation-order noise). Everything around
     the three Python taxes stays JVM."""
-    import pandas as pd  # noqa: F401
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
     def word_count(s):
         return len((s or "").split(" "))
@@ -298,8 +301,8 @@ def j50_udf_quartet(spark, sf_dir):
     def a_count(s):  # bare signature, see j32 note on future-annotations
         return s.str.count("a").astype("int64")
 
-    @pandas_udf("long", PandasUDFType.GROUPED_AGG)
-    def sum_sq(v):
+    @pandas_udf("long")
+    def sum_sq(v: pd.Series) -> int:  # grouped-agg, from the hints
         import numpy as np
 
         a = v.to_numpy(dtype="int64")

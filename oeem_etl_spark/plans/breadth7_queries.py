@@ -18,6 +18,7 @@ import tempfile
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from oeem_etl_spark.catalog import local_frame
 from oeem_etl_spark.plans.registry import query
 from oeem_etl_spark.plans.util import T, dsum, sql_dsum
 
@@ -442,7 +443,8 @@ def k123_period_normalized_percentiles(spark, sf_dir):
     verifiable member: integer-micros buckets, cumulative counts,
     ceil-rank interpolation; all integer until display)."""
     ev = T(spark, sf_dir, "events")
-    periods = spark.createDataFrame(
+    periods = local_frame(
+        spark,
         [
             ("baseline", "2024-01-01", "2024-01-10"),
             ("blackout", "2024-01-10", "2024-01-20"),
@@ -454,7 +456,8 @@ def k123_period_normalized_percentiles(spark, sf_dir):
         F.col("s").cast("timestamp").alias("p_start"),
         F.col("e").cast("timestamp").alias("p_end"),
     )
-    conv = spark.createDataFrame(
+    conv = local_frame(
+        spark,
         [
             ("view", 0.001),
             ("click", 1.0),

@@ -22,6 +22,7 @@ import tempfile
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from oeem_etl_spark.catalog import local_frame
 from oeem_etl_spark.plans.registry import query
 from oeem_etl_spark.plans.util import T, dsum, sql_dsum
 
@@ -109,7 +110,8 @@ def c80_price_band_overlap_audit(spark, sf_dir):
     EXCEPT (G4) between the two expose exactly the overlap-spill and
     small-size rows. Band table is a 3-row in-memory source (A5)."""
     part = T(spark, sf_dir, "part")
-    bands = spark.createDataFrame(
+    bands = local_frame(
+        spark,
         _C80_BANDS, "band_id int, lo double, hi double"
     )
     multi = part.join(
@@ -266,7 +268,8 @@ def c81_campaign_attribution_reconcile(spark, sf_dir):
             F.lit("2002-01-01").cast("timestamp"),
         ).alias("next_date"),
     ).localCheckpoint()
-    camp = spark.createDataFrame(
+    camp = local_frame(
+        spark,
         [(c, s, e) for c, s, e in _C81_CAMPAIGNS],
         "campaign_id int, c_start string, c_end string",
     ).select(
@@ -394,7 +397,7 @@ def a60_csv_units_timeparse(spark, sf_dir):
     raw = spark.read.option("header", True).schema(
         "event_type string, ts_s string, unit string, value string"
     ).csv(remote)
-    factors = spark.createDataFrame(_A60_FACTORS, "unit string, to_kwh double")
+    factors = local_frame(spark, _A60_FACTORS, "unit string, to_kwh double")
     clean = (
         raw.withColumnRenamed("value", "reading")
         .withColumn("reading", F.col("reading").cast("double"))
@@ -515,7 +518,8 @@ def a61_fetch_upsert_reconcile(spark, sf_dir):
             for f in os.listdir(remote_dir)
             if f.endswith(".csv") and not f.startswith(("_", "."))
         )
-        tasks = spark.createDataFrame(
+        tasks = local_frame(
+            spark,
             [(s, s) for s in shards], "task_id string, uri string"
         )
         ff = functools.partial(
@@ -543,7 +547,8 @@ def a61_fetch_upsert_reconcile(spark, sf_dir):
     up.bulk_upload(base_p, uf, epoch_id=1, batch_size=200, max_attempts=4)
     up.bulk_upload(upd_p, uf, epoch_id=2, batch_size=200, max_attempts=4)
     state = up.FilesystemDatastore(dsroot).state("o_orderkey", "seq")
-    ds = spark.createDataFrame(
+    ds = local_frame(
+        spark,
         [
             (int(v["o_orderkey"]), str(v["status"]), float(v["price"]))
             for v in state.values()
@@ -802,7 +807,7 @@ def i73_dedup_tier_daily(spark, sf_dir):
         "user_id", "event_type", F.date_trunc("day", F.col("ts")).alias("day")
     )
     deduped = ops.dedup_keys(sdf, ["user_id", "event_type", "day"])
-    tiers = spark.createDataFrame(_I73_TIERS, "event_type string, tier string")
+    tiers = local_frame(spark, _I73_TIERS, "event_type string, tier string")
     enriched = ops.enrich(
         ops.with_watermark(deduped, "10 minutes", ts_col="day"), tiers, "event_type"
     )
@@ -927,10 +932,12 @@ def k130_joule_rate_bands(spark, sf_dir):
         "value",
         F.date_format("ts", "yyyyMMdd'T'HHmmss").alias("ts_s"),
     )
-    factors = spark.createDataFrame(
+    factors = local_frame(
+        spark,
         _K130_FACTORS, "event_type string, to_joule double"
     )
-    bands = spark.createDataFrame(
+    bands = local_frame(
+        spark,
         _K130_BANDS, "band_id int, lo double, hi double"
     )
     e = (
@@ -1654,7 +1661,8 @@ def k131_grid_quantile_bands(spark, sf_dir):
     sl = al.groupBy("slot").agg(
         F.expr("percentile_approx(value, 0.5, 1000000)").alias("p50")
     )
-    bands = spark.createDataFrame(
+    bands = local_frame(
+        spark,
         _K131_BANDS, "band_id int, lo double, hi double"
     )
     return (

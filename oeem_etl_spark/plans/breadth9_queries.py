@@ -22,6 +22,7 @@ import tempfile
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from oeem_etl_spark.catalog import local_frame
 from oeem_etl_spark.operators.splits import sql_hash_uniform
 from oeem_etl_spark.plans.registry import query
 from oeem_etl_spark.plans.util import T, dsum, sql_dsum
@@ -642,7 +643,8 @@ def c82_period_fill_reconcile(spark, sf_dir):
             (F.col("o_orderdate") + F.expr("INTERVAL 14 DAY")).alias("o_close"),
         )
     )
-    periods = spark.createDataFrame(
+    periods = local_frame(
+        spark,
         _C82_MONTHS, "period_id int, p_start string, p_end string"
     ).select(
         "period_id",
@@ -748,7 +750,8 @@ def k132_normalized_slot_p90_bands(spark, sf_dir):
     inclusive end."""
     from oeem_etl_spark.operators.relational import asof_align_broadcast
 
-    conv = spark.createDataFrame(
+    conv = local_frame(
+        spark,
         _K132_FACTORS, "event_type string, factor double"
     )
     ev = (
@@ -778,7 +781,8 @@ def k132_normalized_slot_p90_bands(spark, sf_dir):
     sl = al.groupBy("event_type", "slot").agg(
         F.expr("percentile_approx(nvm, 0.9, 1000000)").alias("p90")
     )
-    bands = spark.createDataFrame(
+    bands = local_frame(
+        spark,
         _K132_BANDS, "band_id int, lo long, hi long"
     )
     return (
@@ -1428,7 +1432,7 @@ def i75_stream_enrich_daily(spark, sf_dir):
     from oeem_etl_spark.streaming import harness, ops
     from oeem_etl_spark.streaming.source import events_stream
 
-    conv = spark.createDataFrame(_I75_FACTORS, "event_type string, pts int")
+    conv = local_frame(spark, _I75_FACTORS, "event_type string, pts int")
     sdf = events_stream(spark, sf_dir)
     enriched = ops.enrich(sdf, F.broadcast(conv), "event_type").where(
         F.col("pts") > 0
@@ -1897,7 +1901,8 @@ def a64_orders_csv_pipeline(spark, sf_dir):
         for f in os.listdir(remote)
         if f.endswith(".csv") and not f.startswith(("_", "."))
     )
-    tasks = spark.createDataFrame(
+    tasks = local_frame(
+        spark,
         [(s, s) for s in shards], "task_id string, uri string"
     )
     ffactory = functools.partial(
@@ -1950,6 +1955,7 @@ def a64_orders_csv_pipeline(spark, sf_dir):
         (str(v["priority"]), int(v["n_orders"]), int(v["revenue_cents"]))
         for v in state.values()
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows, "priority string, n_orders long, revenue_cents long"
     ).orderBy("priority")

@@ -16,6 +16,7 @@ import tempfile
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from oeem_etl_spark.catalog import local_frame
 from oeem_etl_spark.functions import udfs
 from oeem_etl_spark.plans.registry import query
 from oeem_etl_spark.plans.util import T, dsum, sql_dsum
@@ -139,7 +140,8 @@ def a33_inmemory_ordered_extremes(spark, sf_dir):
     then ordered first/last per type via min_by/max_by on a composite
     (ts, id) key — total order, so the extremes are deterministic even
     with duplicate timestamps."""
-    weights = spark.createDataFrame(
+    weights = local_frame(
+        spark,
         [("view", 1), ("click", 3), ("purchase", 10), ("signup", 5), ("error", 0)],
         "event_type string, weight int",
     )
@@ -193,7 +195,8 @@ def c32_interval_overlap_quarters(spark, sf_dir):
             (F.col("o_orderdate") + F.expr("INTERVAL 30 DAYS")).alias("e"),
         )
     )
-    q = spark.createDataFrame(
+    q = local_frame(
+        spark,
         [
             ("q1", "1995-01-01", "1995-03-31"),
             ("q2", "1995-04-01", "1995-06-30"),
@@ -537,7 +540,8 @@ def k57_align_month_windows(spark, sf_dir):
         .where(F.col("event_id") <= 3000)
         .select("event_id", "ts")
     )
-    months = spark.createDataFrame(
+    months = local_frame(
+        spark,
         [("m1", "2024-01-01"), ("m2", "2024-02-01"), ("m3", "2024-03-01")],
         "month_label STRING, boundary_s STRING",
     ).select(
@@ -728,7 +732,8 @@ def a36_fetch_upload_by_type(spark, sf_dir):
         for f in os.listdir(remote)
         if f.endswith(".csv") and not f.startswith(("_", "."))
     )
-    tasks = spark.createDataFrame(
+    tasks = local_frame(
+        spark,
         [(s, s) for s in shards], "task_id string, uri string"
     )
     ffactory = functools.partial(
@@ -767,6 +772,7 @@ def a36_fetch_upload_by_type(spark, sf_dir):
         (str(v["event_type"]), int(v["n_events"]), float(v["total_value"]))
         for v in state.values()
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows, "event_type string, n_events long, total_value double"
     )

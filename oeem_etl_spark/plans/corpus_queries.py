@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from oeem_etl_spark.catalog import local_frame
 from oeem_etl_spark.operators import corpus
 from oeem_etl_spark.plans.registry import query
 from oeem_etl_spark.plans.util import T
@@ -711,7 +712,8 @@ def l64_bpe_train(spark, sf_dir):
     merges, _ = bpe.bpe_train(
         docs, n_merges=_BPE_MERGES, top_words=_BPE_TOP_WORDS
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(s, lft, rgt, lft + rgt, cnt) for s, lft, rgt, cnt in merges],
         "step int, left_sym string, right_sym string, merged string,"
         " pair_count long",

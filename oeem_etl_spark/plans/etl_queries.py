@@ -8,6 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from oeem_etl_spark.catalog import local_frame
 from oeem_etl_spark.operators.quality import validate_quality
 from oeem_etl_spark.operators.relational import asof_join
 from oeem_etl_spark.operators.timeseries import (
@@ -185,7 +186,8 @@ def k7_interval_align(spark, sf_dir):
     from oeem_etl_spark.operators.relational import asof_align_broadcast
 
     ev = T(spark, sf_dir, "events").select("event_id", "ts")
-    periods = spark.createDataFrame(
+    periods = local_frame(
+        spark,
         [
             ("baseline", "2024-01-01"),
             ("blackout", "2024-01-10"),
@@ -225,7 +227,8 @@ def k8_normalize_units(spark, sf_dir):
     """Unit normalization: broadcast-join the conversion lookup, multiply
     (Wh→kWh / therms→kWh semantics on the fixture's enum)."""
     ev = T(spark, sf_dir, "events")
-    conv = spark.createDataFrame(
+    conv = local_frame(
+        spark,
         [
             ("view", 0.001),
             ("click", 1.0),
@@ -960,7 +963,8 @@ def k27_rated_billing(spark, sf_dir):
         .withColumn("ev_end", F.col("ts") + F.expr("INTERVAL 1 HOUR"))
     )
     users = ev.select("user_id").distinct()
-    changes = spark.createDataFrame(
+    changes = local_frame(
+        spark,
         [("2024-01-01 00:00:00", 2), ("2024-01-15 00:00:00", 3)],
         "rate_ts_s STRING, rate INT",
     ).select(F.col("rate_ts_s").cast("timestamp").alias("rate_ts"), "rate")
@@ -974,7 +978,8 @@ def k27_rated_billing(spark, sf_dir):
         value_cols=["rate"],
         allow_exact=True,
     )
-    periods = spark.createDataFrame(
+    periods = local_frame(
+        spark,
         [
             ("w1", "2024-01-01", "2024-01-08"),
             ("w2", "2024-01-05", "2024-01-12"),
@@ -2059,7 +2064,7 @@ def k43_expanding_cv_folds(spark, sf_dir):
     d = ev.groupBy(
         "user_id", F.date_trunc("day", F.col("ts")).alias("day")
     ).agg(F.sum(qlong(F.col("value"), 1_000_000)).alias("ym"))
-    folds = spark.createDataFrame(cutoffs, "fold int, cutoff_s string").select(
+    folds = local_frame(spark, cutoffs, "fold int, cutoff_s string").select(
         "fold", F.col("cutoff_s").cast("timestamp").alias("cutoff")
     )
     j = d.crossJoin(F.broadcast(folds))

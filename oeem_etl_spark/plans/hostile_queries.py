@@ -31,6 +31,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from oeem_etl_spark.catalog import local_frame
 from oeem_etl_spark.operators import bpe, dedup
 from oeem_etl_spark.plans import xxh64_sql
 from oeem_etl_spark.plans.llm_queries import minhash_oracle_sql
@@ -99,7 +100,7 @@ _DOCS_CTE = f"hdocs(doc_id, text) AS (VALUES {_docs_values()}),\n    "
 
 
 def _hostile_df(spark):
-    return spark.createDataFrame(HOSTILE_DOCS, "doc_id int, text string")
+    return local_frame(spark, HOSTILE_DOCS, "doc_id int, text string")
 
 
 # ---------------------------------------------------------------------------
@@ -241,7 +242,8 @@ def x3_hostile_bpe_train(spark, sf_dir):
         top_words=_X3_TOP_WORDS,
         max_word_len=_X3_MAX_WORD,
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(s, lft, rgt, lft + rgt, cnt) for s, lft, rgt, cnt in merges],
         "step int, left_sym string, right_sym string, merged string,"
         " pair_count bigint",
@@ -453,7 +455,7 @@ def x6_hostile_fuzzy_join(spark, sf_dir):
     pandas canonicalization."""
     from oeem_etl_spark.operators.text import fuzzy_join
 
-    names = spark.createDataFrame(_FUZZY_NAMES, "id int, name string")
+    names = local_frame(spark, _FUZZY_NAMES, "id int, name string")
     left = names.select(F.col("id").alias("a_id"), F.col("name").alias("a_name"))
     right = names.select(F.col("id").alias("b_id"), F.col("name").alias("b_name"))
     return (

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from oeem_etl_spark.catalog import local_frame
 from oeem_etl_spark.operators import corpus as corpus_ops
 from oeem_etl_spark.operators import dedup, multimodal, similarity, text
 from oeem_etl_spark.plans import xxh64_sql
@@ -703,7 +704,7 @@ _MARKERS = [
 def l10_language_id(spark, sf_dir):
     """n-gram/marker-token language-ID heuristic (deterministic voting)."""
     docs = T(spark, sf_dir, "documents")
-    markers = spark.createDataFrame(_MARKERS, "lang STRING, marker STRING")
+    markers = local_frame(spark, _MARKERS, "lang STRING, marker STRING")
     return text.language_id(docs, "doc_id", "text", markers)
 
 

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from oeem_etl_spark.catalog import local_frame
 from oeem_etl_spark.operators.relational import (
     asof_join,
     dedupe_keep_latest,
@@ -178,7 +179,8 @@ def a1_parquet_scan(spark, sf_dir):
 )
 def a5_inline_values(spark, sf_dir):
     """In-memory literal source joined (broadcast) to a scanned table."""
-    lit = spark.createDataFrame(
+    lit = local_frame(
+        spark,
         [(0, "alpha"), (1, "beta"), (3, "gamma")], "rk INT, code STRING"
     )
     region = T(spark, sf_dir, "region")
@@ -465,7 +467,8 @@ def c6_range_join(spark, sf_dir):
     """Theta join on value bands: broadcast nested-loop with a range
     predicate — the tiny band table is the broadcast side."""
     part = T(spark, sf_dir, "part")
-    bands = spark.createDataFrame(
+    bands = local_frame(
+        spark,
         [("low", 0.0, 500.0), ("mid", 500.0, 1200.0), ("high", 1200.0, 1e9)],
         "band STRING, lo DOUBLE, hi DOUBLE",
     )
@@ -500,7 +503,8 @@ def c7_interval_overlap_join(spark, sf_dir):
         .withColumn("ev_end", F.col("ts") + F.expr("INTERVAL 1 HOUR"))
         .withColumnRenamed("ts", "ev_start")
     )
-    periods = spark.createDataFrame(
+    periods = local_frame(
+        spark,
         [
             ("w1", "2024-01-01", "2024-01-08"),
             ("w2", "2024-01-05", "2024-01-12"),
@@ -1949,7 +1953,8 @@ def c14_overlap_user_periods(spark, sf_dir):
         .withColumnRenamed("ts", "ev_start")
         .select("ev_start", "ev_end", "user_id")
     )
-    periods = spark.createDataFrame(
+    periods = local_frame(
+        spark,
         [("w1", "2024-01-01", "2024-01-08"), ("w2", "2024-01-05", "2024-01-12")],
         "period STRING, p_start_s STRING, p_end_s STRING",
     ).select(

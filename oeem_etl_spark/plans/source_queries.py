@@ -14,6 +14,7 @@ import tempfile
 
 from pyspark.sql import functions as F
 
+from oeem_etl_spark.catalog import local_frame
 from oeem_etl_spark.plans.registry import query
 from oeem_etl_spark.plans.util import T
 from oeem_etl_spark.sources import manifest as mf
@@ -266,7 +267,7 @@ def a14_fetch_upload_pipeline(spark, sf_dir):
     )
 
     # 1. fetch through a transport that fails each shard's first attempt
-    tasks = spark.createDataFrame([(s, s) for s in shards], "task_id string, uri string")
+    tasks = local_frame(spark, [(s, s) for s in shards], "task_id string, uri string")
     ffactory = functools.partial(
         fx.local_flaky_fetcher, remote=remote, fail_times=1, state_dir=fstate
     )
@@ -296,7 +297,8 @@ def a14_fetch_upload_pipeline(spark, sf_dir):
         (int(v["bucket"]), int(v["n_events"]), float(v["total_value"]))
         for v in state.values()
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows, "bucket long, n_events long, total_value double"
     ).orderBy("bucket")
 
@@ -335,7 +337,8 @@ def a15_python_datasource(spark, sf_dir):
     root = os.path.join(_TMP, "a15_pyds")
     shutil.rmtree(root, ignore_errors=True)
     landing = os.path.join(root, "landing")
-    tasks = spark.createDataFrame(
+    tasks = local_frame(
+        spark,
         [(f"{t}.xml", f"synthetic://{t}") for t in range(20)],
         "task_id string, uri string",
     )
@@ -479,7 +482,8 @@ def a15b_python_stream_source(spark, sf_dir):
     root = os.path.join(_TMP, "a15b_pyds")
     shutil.rmtree(root, ignore_errors=True)
     landing = os.path.join(root, "landing")
-    tasks = spark.createDataFrame(
+    tasks = local_frame(
+        spark,
         [(f"{t}.xml", f"synthetic://{t}") for t in range(12)],
         "task_id string, uri string",
     )
@@ -959,7 +963,8 @@ def a35_csv_dim_enrich(spark, sf_dir):
     nations = readers.scan_csv(
         spark, path, "n_nationkey BIGINT, n_name STRING, n_regionkey BIGINT"
     )
-    zones = spark.createDataFrame(
+    zones = local_frame(
+        spark,
         [(0, "africa-mideast"), (1, "americas"), (2, "asia"),
          (3, "europe"), (4, "africa-mideast")],
         "rk BIGINT, zone STRING",
@@ -1024,7 +1029,7 @@ def a37_fetch_upload_stats(spark, sf_dir):
         if f.endswith(".csv") and not f.startswith(("_", "."))
     )
 
-    tasks = spark.createDataFrame([(s, s) for s in shards], "task_id string, uri string")
+    tasks = local_frame(spark, [(s, s) for s in shards], "task_id string, uri string")
     ffactory = functools.partial(
         fx.local_flaky_fetcher, remote=remote, fail_times=2, state_dir=fstate
     )
@@ -1054,7 +1059,8 @@ def a37_fetch_upload_stats(spark, sf_dir):
         (str(v["event_type"]), int(v["n_events"]), float(v["total_value"]))
         for v in state.values()
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows, "event_type string, n_events long, total_value double"
     ).orderBy("event_type")
 

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import functools
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -192,12 +193,46 @@ def test_upload_foreach_batch_stream(spark, tmp_path):
 # --- failure injection at 100+ tasks ----------------------------------------
 
 
+def _wait_for_job_tasks_to_end(spark, first_job: int, last_job: int) -> None:
+    """Block until no task of jobs ``first_job`` .. ``last_job - 1`` runs.
+
+    A stage abort marks its job failed at once, but the sibling tasks it
+    kills keep running in their Python workers until those finish or are
+    destroyed; until then they still fetch, write tmp files and rename
+    them. Each one's end reaches the status store as a task-end event, so
+    once the listener bus is drained and every stage of the jobs reports
+    no active task, nothing of those jobs touches the filesystem again.
+    """
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 120
+    while True:
+        bus.waitUntilEmpty()
+        stages = [
+            sid
+            for jid in range(first_job, last_job)
+            if (job := tracker.getJobInfo(jid)) is not None
+            for sid in job.stageIds
+        ]
+        infos = [tracker.getStageInfo(sid) for sid in stages]
+        if all(info is None or info.numActiveTasks == 0 for info in infos):
+            return
+        if time.monotonic() > deadline:
+            raise TimeoutError(f"tasks of jobs {first_job}..{last_job - 1} still run")
+        time.sleep(0.05)
+
+
 def test_fetch_120_tasks_partial_failure_then_replay(spark, tmp_path):
     """Late-arriving remotes: 10 of 120 task URIs don't exist yet, so the
     first distributed fetch fails permanently (no retry burned on 404s)
     after the healthy partitions landed their files; staging the missing
     remotes and re-running the SAME job completes the landing dir with
-    every file fetched exactly once (skip consumes no attempts)."""
+    every file fetched exactly once (skip consumes no attempts).
+
+    The counts are taken only after every task of the failed job has
+    ended (sibling tasks killed by the abort finish asynchronously), so
+    they are exact whatever the kill timing."""
     remote = tmp_path / "remote"
     remote.mkdir()
     state = tmp_path / "state"
@@ -214,8 +249,11 @@ def test_fetch_120_tasks_partial_failure_then_replay(spark, tmp_path):
         fx.local_flaky_fetcher, remote=str(remote), fail_times=1, state_dir=str(state)
     )
 
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    first_job = dag.nextJobId()
     with pytest.raises(Exception):  # missing remote -> permanent FetchError
         fx.fetch_to_landing(tasks.select("task_id", "uri"), factory, landing).collect()
+    _wait_for_job_tasks_to_end(spark, first_job, dag.nextJobId())
     # the poisoned partition is range-partition 3 (idx 90..119): its tasks
     # 90..109 land before idx 110 raises; sibling partitions may be killed
     # mid-run by the stage abort — whatever landed is atomic and complete
@@ -227,9 +265,6 @@ def test_fetch_120_tasks_partial_failure_then_replay(spark, tmp_path):
 
     for n in names[110:]:  # the late remotes arrive
         (remote / n).write_text(f"id,val\n{n},1\n")
-    spark.sparkContext.cancelAllJobs()  # quiesce any straggler kill-races
-    landed2 = set(os.listdir(landing))  # tasks killed async may land late
-    assert landed <= landed2 <= set(names[:110])
     status = {
         r["task_id"]: r["status"]
         for r in fx.fetch_to_landing(
@@ -237,12 +272,10 @@ def test_fetch_120_tasks_partial_failure_then_replay(spark, tmp_path):
         ).collect()
     }
     assert {s for s in status.values()} == {"skipped", "fetched"}
-    assert sum(s == "skipped" for s in status.values()) >= len(landed2)
-    assert sum(s == "fetched" for s in status.values()) == 120 - sum(
-        s == "skipped" for s in status.values()
-    )
+    assert {t for t, s in status.items() if s == "skipped"} == landed
+    assert sum(s == "fetched" for s in status.values()) == 120 - len(landed)
     assert sorted(os.listdir(landing)) == names
-    assert all(probe.attempts(n) == 2 for n in sorted(landed2))  # skips burn nothing
+    assert all(probe.attempts(n) == 2 for n in sorted(landed))  # skips burn nothing
 
 
 def test_bulk_upload_150_chunks_effectively_once(spark, tmp_path):
