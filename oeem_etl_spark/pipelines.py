@@ -16,8 +16,10 @@ Spark pipelines:
 Unlike Luigi there is no worker pool to manage: each "task" is a Spark
 action, and Spark itself fans the work across the cluster; the DAG here
 only sequences materialization boundaries. Targets are parquet
-directories, so any filesystem Hadoop supports (local/GCS/S3) works
-unchanged — the reference's storage-target abstraction for free.
+directories on the local filesystem: Spark would write them to any
+filesystem Hadoop supports, but ``target_exists`` checks the ``_SUCCESS``
+marker with ``os.path.exists`` (on GCS/S3 substitute the store's own
+existence check there).
 """
 
 from __future__ import annotations
@@ -27,6 +29,7 @@ from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 @dataclass(frozen=True)
@@ -52,6 +55,13 @@ def run_pipeline(
 
     Returns {task name: "built" | "skipped"}. Raises on cycles or unknown
     dependencies. ``force=True`` rebuilds everything regardless of targets.
+
+    A dependency built earlier in the same call is read back with the
+    schema of the frame just written, so Spark starts no job to infer it
+    from a footer (a parquet read makes every column nullable either way).
+    A skipped dependency, whose target predates the call, and a
+    ``partition_by`` dependency, whose partition column types come from
+    the directory names, are read with an inferred schema.
     """
     by_name = {t.name: t for t in tasks}
     for t in tasks:
@@ -78,15 +88,23 @@ def run_pipeline(
         visit(t)
 
     status: dict[str, str] = {}
+    written: dict[str, StructType] = {}  # built this call, not partitioned
     for t in order:
         if not force and target_exists(t.output):
             status[t.name] = "skipped"
             continue
-        inputs = {d: spark.read.parquet(by_name[d].output) for d in t.deps}
+        inputs = {}
+        for d in t.deps:
+            reader = spark.read
+            if d in written:
+                reader = reader.schema(written[d])
+            inputs[d] = reader.parquet(by_name[d].output)
         df = t.fn(spark, inputs)
         writer = df.write.mode("overwrite")
         if t.partition_by:
             writer = writer.partitionBy(*t.partition_by)
         writer.parquet(t.output)
+        if not t.partition_by:
+            written[t.name] = df.schema
         status[t.name] = "built"
     return status

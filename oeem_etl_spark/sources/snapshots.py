@@ -10,7 +10,9 @@ Mechanics:
 - **Full manifests.** ``<root>/_manifests/v{N}.json`` lists the table's
   member files at version N, with per-file row counts and per-column
   min/max stats (read from parquet footers via pyarrow — metadata only,
-  no data scan).
+  no data scan), and the table's schema as Spark JSON (Delta's
+  ``metaData.schemaString``). A read hands that schema to Spark, so it
+  opens no footer and starts no inference job.
 - **Atomic publish + optimistic concurrency.** A manifest is written to a
   temp name, fsynced, then ``os.link``-ed to its final name — link is
   atomic and FAILS with EEXIST if another writer won the version race, so
@@ -48,6 +50,7 @@ import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 @dataclass(frozen=True)
@@ -73,7 +76,10 @@ def _file_entry(path: str) -> dict:
             if s is None or not s.has_min_max:
                 continue
             name = col.path_in_schema
-            mn, mx = s.min, s.max
+            try:
+                mn, mx = s.min, s.max
+            except NotImplementedError:
+                continue  # pyarrow cannot decode INT32/INT64-backed decimals
             if isinstance(mn, bytes):
                 try:
                     mn, mx = mn.decode(), mx.decode()
@@ -128,8 +134,21 @@ class SnapshotTable:
         return sorted(out)
 
     def _manifest(self, version: int) -> dict:
-        with open(os.path.join(self.manifest_dir, f"v{version}.json")) as fh:
-            return json.load(fh)
+        try:
+            with open(os.path.join(self.manifest_dir, f"v{version}.json")) as fh:
+                return json.load(fh)
+        except FileNotFoundError:
+            raise ValueError(
+                f"version {version} does not exist (vacuumed or never committed); "
+                f"versions: {self.versions()}"
+            ) from None
+
+    @staticmethod
+    def _schema(manifest: dict) -> StructType | None:
+        """The schema recorded at commit; None for manifests written before
+        commits recorded one (their reads infer it from a footer)."""
+        js = manifest.get("schema")
+        return None if js is None else StructType.fromJson(json.loads(js))
 
     def latest_version(self) -> int | None:
         vs = self.versions()
@@ -175,7 +194,11 @@ class SnapshotTable:
         (Structured Streaming re-delivers the in-flight batch after a
         crash) and becomes a no-op returning the current version — the
         foreachBatch exactly-once recipe, transactional because the id
-        rides inside the atomically-published manifest itself."""
+        rides inside the atomically-published manifest itself.
+
+        The manifest records the table schema: ``df.schema``, except that an
+        append keeps the base version's schema (a column the append adds is
+        read only with ``merge_schema=True``)."""
         if mode not in ("append", "overwrite"):
             raise ValueError(f"commit mode must be 'append' or 'overwrite', not {mode!r}")
         base = self.latest_version()
@@ -208,13 +231,19 @@ class SnapshotTable:
                     vals[col] = val
                 e["partition"] = vals
         if mode == "append" and base is not None:
-            entries = self._manifest(base)["files"] + entries
+            prior = self._manifest(base)
+            entries = prior["files"] + entries
+            schema = prior.get("schema")
+        else:
+            schema = df.schema.json()
         manifest = {
             "version": (base or 0) + 1 if base is not None else 1,
             "committed_at": time.time(),
             "mode": mode,
             "files": entries,
         }
+        if schema is not None:
+            manifest["schema"] = schema
         if batch_id is not None:
             manifest["batch_id"] = batch_id
         return self._publish(manifest, manifest["version"])
@@ -233,6 +262,8 @@ class SnapshotTable:
             "mode": f"rollback:{to_version}",
             "files": m["files"],
         }
+        if "schema" in m:
+            new["schema"] = m["schema"]
         return self._publish(new, latest + 1)
 
     def compact(self, spark: SparkSession, target_file_mb: int = 128) -> int:
@@ -324,12 +355,20 @@ class SnapshotTable:
         schemas (column adds): the read schema is the union of all file
         schemas and files missing a column yield NULLs — Delta/Iceberg
         column-add semantics via parquet's own mergeSchema. Off by
-        default because schema reconciliation reads every file footer."""
+        default because schema reconciliation reads every file footer.
+
+        A default read takes the schema the pinned manifest recorded, so it
+        opens no footer and starts no Spark job until an action runs. Three
+        reads still infer the schema from a footer: manifests written before
+        commits recorded a schema, ``merge_schema=True``, and hive-partitioned
+        files (partition column types come from the directory names)."""
         m = self._resolve(version, as_of)
         all_entries = m["files"]
         if not all_entries:
             # an entirely fileless table has no schema to offer
             raise ValueError("snapshot has no files (empty commit?)")
+        partitioned = any("partition" in e for e in all_entries)
+        schema = None if merge_schema or partitioned else self._schema(m)
         entries = all_entries
         if prune is not None:
             col, lo, hi = prune
@@ -337,8 +376,9 @@ class SnapshotTable:
         if not entries:
             # every file pruned: pruning must change I/O, NEVER results —
             # return an empty frame with the table schema (zero rows of one
-            # known file; only its footer is read). Partitioned entries go
-            # through basePath so partition columns stay in the schema.
+            # known file; only its footer is read, and not even that when
+            # the schema is recorded). Partitioned entries go through
+            # basePath so partition columns stay in the schema.
             e0 = all_entries[0]
             if "partition" in e0:
                 rel = os.path.relpath(e0["path"], self.data_dir)
@@ -348,11 +388,14 @@ class SnapshotTable:
                     .parquet(e0["path"])
                     .limit(0)
                 )
-            return spark.read.parquet(e0["path"]).limit(0)
+            reader = spark.read if schema is None else spark.read.schema(schema)
+            return reader.parquet(e0["path"]).limit(0)
         if not any("partition" in e for e in entries):
             reader = spark.read
             if merge_schema:
                 reader = reader.option("mergeSchema", "true")
+            elif schema is not None:
+                reader = reader.schema(schema)
             return reader.parquet(*[e["path"] for e in entries])
         # hive-partitioned files: partition columns live in the directory
         # names UNDER each commit's uuid dir, so group by commit dir and
@@ -388,7 +431,9 @@ class SnapshotTable:
         data, no dedup join). Raises if any commit in the range rewrote
         membership (overwrite/rollback/compaction) — file-set diffs
         don't describe row-level changes across rewrites, so refusing is
-        the correct behavior, not an approximation."""
+        the correct behavior, not an approximation. Rows come in the schema
+        ``to_version`` recorded (inferred for older manifests and for
+        hive-partitioned files, as in ``read``)."""
         to_version = to_version if to_version is not None else self.latest_version()
         if to_version is None or since_version > to_version:
             raise ValueError(
@@ -402,11 +447,12 @@ class SnapshotTable:
                     "change feed is only valid across pure appends"
                 )
         old = {e["path"] for e in self._manifest(since_version)["files"]}
-        new = [
-            e["path"]
-            for e in self._manifest(to_version)["files"]
-            if e["path"] not in old
-        ]
+        m = self._manifest(to_version)
+        new = [e for e in m["files"] if e["path"] not in old]
         if not new:
             raise ValueError("no files added in range (empty increment)")
-        return spark.read.parquet(*new)
+        reader = spark.read
+        schema = self._schema(m)
+        if schema is not None and not any("partition" in e for e in new):
+            reader = reader.schema(schema)
+        return reader.parquet(*[e["path"] for e in new])

@@ -140,6 +140,20 @@ def enrich(stream_df: DataFrame, dim_df: DataFrame, on, how: str = "inner") -> D
     return stream_df.join(F.broadcast(dim_df), on, how)
 
 
+def _state_row(cols: dict):
+    """One output row of an ``applyInPandasWithState`` function, in object
+    columns. pyspark's state serializer appends an empty object-typed frame
+    to every function output and ``pd.concat``s them; typed numeric or
+    datetime columns then make pandas warn that empty entries will start to
+    count toward the result dtype (FutureWarning, "DataFrame concatenation
+    with empty or all-NA entries"). Object columns concatenate to object
+    now and later, and Arrow converts them to the declared output schema.
+    A naive timestamp is read as UTC."""
+    import pandas as pd
+
+    return pd.DataFrame({k: [v] for k, v in cols.items()}, dtype=object)
+
+
 def running_totals_state(df: DataFrame, key: str = "user_id", value_col: str = "value"):
     """I6: arbitrary stateful per-key processing via applyInPandasWithState.
 
@@ -156,15 +170,13 @@ def running_totals_state(df: DataFrame, key: str = "user_id", value_col: str = "
     state_schema = "n bigint, total_micros bigint"
 
     def fn(key_tuple, pdf_iter, state):
-        import pandas as pd
-
         n, micros = state.get if state.exists else (0, 0)
         for pdf in pdf_iter:
             n += len(pdf)
             micros += sum_micros(pdf[value_col].to_numpy("float64"))
         state.update((int(n), int(micros)))
-        yield pd.DataFrame(
-            {key: [key_tuple[0]], "n_events": [n], "total_value": [round(micros / 1e6, 6)]}
+        yield _state_row(
+            {key: key_tuple[0], "n_events": n, "total_value": round(micros / 1e6, 6)}
         )
 
     return df.groupBy(key).applyInPandasWithState(
@@ -218,11 +230,11 @@ def latest_state(
             if ts_us is None or cand > (ts_us, best_id, micros):
                 ts_us, best_id, micros = cand
         state.update((ts_us, best_id, micros))
-        yield pd.DataFrame(
+        yield _state_row(
             {
-                key: [key_tuple[0]],
-                "last_ts": [pd.Timestamp(ts_us * 1000)],
-                "last_value": [round(micros / 1e6, 6)],
+                key: key_tuple[0],
+                "last_ts": pd.Timestamp(ts_us * 1000),
+                "last_value": round(micros / 1e6, 6),
             }
         )
 
@@ -367,8 +379,6 @@ def tiered_totals_state(
     state_schema = "n bigint, total_micros bigint"
 
     def fn(key_tuple, pdf_iter, state):
-        import pandas as pd
-
         n, micros = state.get if state.exists else (0, 0)
         for pdf in pdf_iter:
             n += len(pdf)
@@ -377,14 +387,14 @@ def tiered_totals_state(
         t1 = min(micros, b1_micros)
         t2 = min(micros, b2_micros) - t1
         t3 = max(0, micros - b2_micros)
-        yield pd.DataFrame(
+        yield _state_row(
             {
-                key: [key_tuple[0]],
-                "n_events": [n],
-                "total_units": [round(micros / 1e6, 6)],
-                "t1_units": [round(t1 / 1e6, 6)],
-                "t2_units": [round(t2 / 1e6, 6)],
-                "t3_units": [round(t3 / 1e6, 6)],
+                key: key_tuple[0],
+                "n_events": n,
+                "total_units": round(micros / 1e6, 6),
+                "t1_units": round(t1 / 1e6, 6),
+                "t2_units": round(t2 / 1e6, 6),
+                "t3_units": round(t3 / 1e6, 6),
             }
         )
 
@@ -407,8 +417,6 @@ def extremes_state(df: DataFrame, key: str = "user_id", value_col: str = "value"
     state_schema = "n bigint, mn bigint, mx bigint"
 
     def fn(key_tuple, pdf_iter, state):
-        import pandas as pd
-
         import numpy as np
 
         n, mn, mx = state.get if state.exists else (0, None, None)
@@ -430,12 +438,12 @@ def extremes_state(df: DataFrame, key: str = "user_id", value_col: str = "value"
             mn = bmn if mn is None else min(mn, bmn)
             mx = bmx if mx is None else max(mx, bmx)
         state.update((int(n), int(mn), int(mx)))
-        yield pd.DataFrame(
+        yield _state_row(
             {
-                key: [key_tuple[0]],
-                "n_events": [n],
-                "min_value": [round(mn / 1e6, 6)],
-                "max_value": [round(mx / 1e6, 6)],
+                key: key_tuple[0],
+                "n_events": n,
+                "min_value": round(mn / 1e6, 6),
+                "max_value": round(mx / 1e6, 6),
             }
         )
 

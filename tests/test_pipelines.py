@@ -69,6 +69,45 @@ def test_pipeline_rebuilds_only_missing(spark, tmp_path):
     assert calls == ["transform"]
 
 
+def test_dependency_built_in_the_same_call_is_read_without_a_job(
+    spark, tmp_path, monkeypatch
+):
+    """The dependency read takes the schema of the frame just written, so
+    no job runs between the upstream write and the downstream build."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    after_write: list[int] = []
+    write = DataFrameWriter.parquet
+
+    def counted_write(self, *args, **kwargs):
+        write(self, *args, **kwargs)
+        after_write.append(dag.nextJobId())
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", counted_write)
+    seen = {}
+
+    def make(spark_, inputs):
+        return spark_.range(10).select("id", F.col("id").cast("string").alias("s"))
+
+    def consume(spark_, inputs):
+        seen["columns"] = inputs["make"].columns
+        seen["next_job"] = dag.nextJobId()
+        seen["schema"] = inputs["make"].schema
+        return inputs["make"].where(F.col("id") % 2 == 0)
+
+    tasks = [
+        Task("make", str(tmp_path / "make"), make),
+        Task("consume", str(tmp_path / "consume"), consume, deps=["make"]),
+    ]
+    assert run_pipeline(spark, tasks) == {"make": "built", "consume": "built"}
+    assert seen["columns"] == ["id", "s"]
+    assert seen["next_job"] == after_write[0]
+    assert seen["schema"] == spark.read.parquet(str(tmp_path / "make")).schema
+    got = spark.read.parquet(str(tmp_path / "consume"))
+    assert sorted(r["id"] for r in got.collect()) == [0, 2, 4, 6, 8]
+
+
 def test_pipeline_cycle_detection(spark, tmp_path):
     t1 = Task("a", str(tmp_path / "a"), lambda s, i: None, deps=["b"])
     t2 = Task("b", str(tmp_path / "b"), lambda s, i: None, deps=["a"])

@@ -50,6 +50,14 @@ def _read_before_first_commit(t, spark):
     t.read(spark, as_of=0.0)
 
 
+def _vacuumed(t, spark):
+    """A table at v2 whose v1 manifest was vacuumed."""
+    t.commit(spark.range(3))
+    t.commit(spark.range(3, 5))
+    t.vacuum(retain_last=1)
+    return t
+
+
 @pytest.mark.parametrize(
     "call, match",
     [
@@ -60,9 +68,17 @@ def _read_before_first_commit(t, spark):
         (lambda t, spark: t.read(spark), "read an empty table"),
         (_read_before_first_commit, "no snapshot at or before"),
         (lambda t, spark: t.read_incremental(spark, 2, 1), "bad change-feed range"),
+        (lambda t, spark: _vacuumed(t, spark).read(spark, version=1),
+         r"version 1 does not exist .*versions: \[2\]"),
+        (lambda t, spark: _vacuumed(t, spark).rollback(7),
+         r"version 7 does not exist .*versions: \[2\]"),
+        (lambda t, spark: _vacuumed(t, spark).read_incremental(spark, 1),
+         r"version 1 does not exist .*versions: \[2\]"),
     ],
     ids=["commit_mode", "rollback_empty", "compact_empty", "vacuum_retain",
-         "resolve_empty", "resolve_as_of", "incremental_range"],
+         "resolve_empty", "resolve_as_of", "incremental_range",
+         "read_missing_version", "rollback_missing_version",
+         "incremental_missing_version"],
 )
 def test_bad_arguments_raise_value_error(spark, table, call, match):
     """Validation raises ValueError, which ``python -O`` keeps; an assert
@@ -282,3 +298,141 @@ def test_schema_evolution_merge_read(spark, table):
     assert got == {i: None for i in range(5)} | {i: "new" for i in range(5, 8)}
     # pinned pre-evolution version keeps the narrow schema
     assert table.read(spark, version=1).columns == ["id"]
+
+
+# -- the schema recorded at commit -------------------------------------------
+
+
+def _files(table, version=None) -> list[str]:
+    v = table.latest_version() if version is None else version
+    return [e["path"] for e in table._manifest(v)["files"]]
+
+
+def _rows(df) -> list[str]:
+    return sorted(map(repr, df.collect()))
+
+
+def _wide(spark, lo, hi):
+    """Non-nullable, nested, temporal and decimal columns: the writer's
+    nullability differs from what a parquet read returns, and pyarrow
+    cannot decode the footer statistics of an INT64-backed decimal."""
+    return spark.range(lo, hi).select(
+        "id",
+        F.col("id").cast("string").alias("s"),
+        (F.col("id") / 3).alias("d"),
+        F.array("id").alias("arr"),
+        F.create_map(F.lit("k"), F.col("id")).alias("m"),
+        F.struct(F.col("id").alias("x")).alias("st"),
+        F.timestamp_seconds("id").alias("ts"),
+        F.col("id").cast("decimal(10,2)").alias("dec"),
+        F.date_add(F.lit("2024-01-01").cast("date"), F.col("id").cast("int")).alias("day"),
+    )
+
+
+def _first_commit(spark, t):
+    t.commit(_wide(spark, 0, 20))
+
+
+def _same_schema_append(spark, t):
+    t.commit(_wide(spark, 0, 20))
+    t.commit(_wide(spark, 20, 30))
+
+
+def _overwrite(spark, t):
+    t.commit(spark.range(5))
+    t.commit(_wide(spark, 0, 20), mode="overwrite")
+
+
+def _compaction(spark, t):
+    t.commit(_wide(spark, 0, 40).repartition(4))
+    t.compact(spark)
+
+
+def _rollback(spark, t):
+    t.commit(_wide(spark, 0, 20))
+    t.commit(spark.range(5), mode="overwrite")
+    t.rollback(1)
+
+
+@pytest.mark.parametrize(
+    "build",
+    [_first_commit, _same_schema_append, _overwrite, _compaction, _rollback],
+    ids=["first_commit", "same_schema_append", "overwrite", "compaction", "rollback"],
+)
+def test_recorded_schema_read_equals_inferred_read(spark, table, build):
+    build(spark, table)
+    assert "schema" in table._manifest(table.latest_version())
+    got = table.read(spark)
+    want = spark.read.parquet(*_files(table))
+    assert got.schema == want.schema  # nullability included
+    assert _rows(got) == _rows(want)
+
+
+def test_append_with_added_column_reads_the_base_schema(spark, table):
+    """Inference would open the lexicographically first path, and data
+    directories are random uuids, so which commit's schema a footer read
+    returned was chance. The recorded schema is the first commit's."""
+    table.commit(spark.range(0, 5))
+    table.commit(spark.range(5, 8).withColumn("tag", F.lit("new")))
+    base = spark.read.parquet(*_files(table, 1)).schema
+    got = table.read(spark)
+    assert got.schema == base
+    assert _rows(got) == _rows(spark.read.schema(base).parquet(*_files(table)))
+    merged = table.read(spark, merge_schema=True)
+    want = spark.read.option("mergeSchema", "true").parquet(*_files(table))
+    assert merged.schema == want.schema
+    assert _rows(merged) == _rows(want)
+
+
+def test_partitioned_commit_read_infers_partition_types(spark, table):
+    df = spark.range(0, 30).select("id", (F.col("id") % 3).cast("string").alias("dt"))
+    table.commit(df, partition_by=["dt"])
+    base = os.path.dirname(os.path.dirname(_files(table)[0]))
+    want = spark.read.option("basePath", base).parquet(*_files(table))
+    got = table.read(spark)
+    assert got.schema == want.schema  # dt comes back as int, last
+    assert _rows(got) == _rows(want)
+
+
+@pytest.mark.parametrize(
+    "read",
+    [
+        lambda t, spark: t.read(spark),
+        lambda t, spark: t.read(spark, prune=("id", 1000, 1050)),
+        lambda t, spark: t.read(spark, prune=("id", 5000, 6000)),
+        lambda t, spark: t.read_incremental(spark, 1),
+    ],
+    ids=["default", "pruned", "all_pruned", "incremental"],
+)
+def test_read_with_recorded_schema_starts_no_job(spark, table, read):
+    table.commit(spark.range(0, 100).coalesce(1))
+    table.commit(spark.range(1000, 1100).coalesce(1))
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = dag.nextJobId()
+    df = read(table, spark)
+    assert df.columns == ["id"]
+    assert dag.nextJobId() == before
+    assert df.schema == spark.read.parquet(*_files(table)).schema
+
+
+def test_manifest_without_schema_reads_by_inference(spark, table):
+    """Manifests written before commits recorded a schema still read."""
+    import json
+
+    table.commit(spark.range(0, 10).coalesce(1))
+    path = os.path.join(table.manifest_dir, "v1.json")
+    with open(path) as fh:
+        m = json.load(fh)
+    del m["schema"]
+    with open(path, "w") as fh:
+        json.dump(m, fh)
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = dag.nextJobId()
+    df = table.read(spark)
+    assert dag.nextJobId() > before  # the footer inference job
+    assert _ids(df) == list(range(10))
+    assert _ids(table.read(spark, prune=("id", 50, 60))) == []
+    # an append onto it records no schema either: nothing to keep
+    table.commit(spark.range(10, 12))
+    assert "schema" not in table._manifest(2)
+    assert _ids(table.read(spark)) == list(range(12))

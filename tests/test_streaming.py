@@ -722,3 +722,43 @@ def test_dedup_sliding_typed_multi_batch(spark, tmp_path):
         "2024-01-01 10:00:00": 2,
         "2024-01-01 10:30:00": 1,
     }, got
+
+
+# Every registered query whose stateful step runs an applyInPandasWithState
+# function (streaming/ops.py: running_totals_state, latest_state,
+# tiered_totals_state, extremes_state).
+STATE_FN_QUERIES = [
+    "i6_stateful_running_totals",
+    "i15_streaming_tiered_totals",
+    "i34_stateful_bucket_totals",
+    "i61_stateful_extremes",
+    "i62_stream_last_write",
+    "i72_stream_dedup_state",
+    "i77_extremes_firstlast",
+]
+
+
+@pytest.fixture()
+def future_warnings_fail_workers(spark):
+    """Python workers for UDFs created inside the test turn FutureWarning
+    into an error. A UDF carries the SparkContext's ``environment`` as it
+    is when the UDF is created, and Spark starts one worker pool per
+    distinct environment."""
+    env = spark.sparkContext.environment
+    env["PYTHONWARNINGS"] = "error::FutureWarning"
+    yield
+    del env["PYTHONWARNINGS"]
+
+
+@pytest.mark.parametrize("name", STATE_FN_QUERIES)
+def test_state_functions_raise_no_pandas_future_warning(
+    spark, sf_dir, name, future_warnings_fail_workers
+):
+    """pyspark pads each state-function output with an empty object frame
+    before ``pd.concat``; typed output columns made pandas warn there
+    (once per worker, 55 times in one sf0.01 registry sweep)."""
+    from oeem_etl_spark import plans
+    from oeem_etl_spark.plans import registry
+
+    plans.load_all()
+    assert registry.all_queries()[name].fn(spark, sf_dir).collect()
