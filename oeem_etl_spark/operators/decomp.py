@@ -66,7 +66,8 @@ def pca_fit(df: DataFrame, vec_col: str, k: int) -> PCAModel:
         .mapInPandas(partials, schema="n long, s array<double>, g array<double>")
         .collect()
     )
-    assert rows, "pca_fit: empty input"
+    if not rows:
+        raise ValueError("pca_fit: empty input")
     n = sum(r["n"] for r in rows)
     d = len(rows[0]["s"])
     s = np.zeros(d)
@@ -212,7 +213,8 @@ def pca_power_fixed(
         )
         .collect()
     )
-    assert rows, "pca_power_fixed: empty input"
+    if not rows:
+        raise ValueError("pca_power_fixed: empty input")
     n = sum(int(r["n"]) for r in rows)
     s = [0] * dim
     g = [[0] * dim for _ in range(dim)]
@@ -231,7 +233,8 @@ def pca_power_fixed(
     for _ in range(iters):
         w = [sum(c[i][j] * v[j] for j in range(dim)) for i in range(dim)]
         m = max(abs(wi) for wi in w)
-        assert m > 0, "pca_power_fixed: zero covariance"
+        if m == 0:
+            raise ValueError("pca_power_fixed: zero covariance")
         v = [
             -((-wi) * v_scale // m) if wi < 0 else wi * v_scale // m
             for wi in w

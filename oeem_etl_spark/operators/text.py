@@ -230,7 +230,8 @@ def deletion_variants(col: Column | str, max_deletions: int = 1) -> Column:
     within edit distance k always share a member of each other's
     ≤k-deletion neighborhoods. Fan-out is O(len) at 1 and O(len²/2) at 2
     — keep 2 for short tokens (names, words), not documents."""
-    assert max_deletions in (1, 2), max_deletions
+    if max_deletions not in (1, 2):
+        raise ValueError(f"max_deletions must be 1 or 2, not {max_deletions!r}")
     c = F.col(col) if isinstance(col, str) else col
     n = F.length(c)
     dels = F.transform(

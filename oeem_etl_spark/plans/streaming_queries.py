@@ -378,13 +378,7 @@ def i10_streaming_cms(spark, sf_dir):
             cells_dir
         )
 
-    q = (
-        sdf.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", harness._mkdtemp_ckpt("i10"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
+    harness.drain(sdf.writeStream.foreachBatch(sink), "i10")
     merged = spark.read.parquet(cells_dir).groupBy("row", "bucket").agg(
         F.sum("cnt").alias("cnt")
     )
@@ -620,15 +614,13 @@ def a22_snapshot_stream_commits(spark, sf_dir):
         .option("maxFilesPerTrigger", "1")
         .parquet(os.path.join(src, "*.parquet"))
     )
-    q = (
+    harness.drain(
         sdf.writeStream.foreachBatch(
             lambda bdf, bid: table.commit(bdf, mode="append", batch_id=bid) and None
-        )
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        ),
+        "a22",
+        ckpt,
     )
-    q.awaitTermination(120)
     return table.read(spark)
 
 

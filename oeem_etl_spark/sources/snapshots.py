@@ -363,13 +363,10 @@ class SnapshotTable:
         commits recorded a schema, ``merge_schema=True``, and hive-partitioned
         files (partition column types come from the directory names)."""
         m = self._resolve(version, as_of)
-        all_entries = m["files"]
-        if not all_entries:
+        if not m["files"]:
             # an entirely fileless table has no schema to offer
             raise ValueError("snapshot has no files (empty commit?)")
-        partitioned = any("partition" in e for e in all_entries)
-        schema = None if merge_schema or partitioned else self._schema(m)
-        entries = all_entries
+        entries = m["files"]
         if prune is not None:
             col, lo, hi = prune
             entries = [e for e in entries if _may_intersect(e, col, lo, hi)]
@@ -377,30 +374,27 @@ class SnapshotTable:
             # every file pruned: pruning must change I/O, NEVER results —
             # return an empty frame with the table schema (zero rows of one
             # known file; only its footer is read, and not even that when
-            # the schema is recorded). Partitioned entries go through
-            # basePath so partition columns stay in the schema.
-            e0 = all_entries[0]
-            if "partition" in e0:
-                rel = os.path.relpath(e0["path"], self.data_dir)
-                base = os.path.join(self.data_dir, rel.split(os.sep)[0])
-                return (
-                    spark.read.option("basePath", base)
-                    .parquet(e0["path"])
-                    .limit(0)
-                )
-            reader = spark.read if schema is None else spark.read.schema(schema)
-            return reader.parquet(e0["path"]).limit(0)
+            # the schema is recorded)
+            return self._frame(spark, m, m["files"][:1]).limit(0)
+        return self._frame(spark, m, entries, merge_schema)
+
+    def _frame(
+        self, spark: SparkSession, m: dict, entries: list[dict], merge_schema: bool = False
+    ) -> DataFrame:
+        """The frame over ``entries``, a subset of manifest ``m``'s files.
+        Plain files are read with the schema ``m`` recorded, if any.
+        Hive-partitioned files keep their partition columns in the
+        directory names UNDER each commit's uuid dir, so they are grouped
+        by commit dir and each group is read with its own basePath, then
+        unioned — group count = retained commits, bounded."""
         if not any("partition" in e for e in entries):
             reader = spark.read
+            schema = self._schema(m)
             if merge_schema:
                 reader = reader.option("mergeSchema", "true")
-            elif schema is not None:
+            elif schema is not None and not any("partition" in e for e in m["files"]):
                 reader = reader.schema(schema)
             return reader.parquet(*[e["path"] for e in entries])
-        # hive-partitioned files: partition columns live in the directory
-        # names UNDER each commit's uuid dir, so group by commit dir and
-        # read each group with its own basePath (restores the partition
-        # columns), then union — group count = retained commits, bounded
         groups: dict[str, list[str]] = {}
         for e in entries:
             rel = os.path.relpath(e["path"], self.data_dir)
@@ -451,8 +445,4 @@ class SnapshotTable:
         new = [e for e in m["files"] if e["path"] not in old]
         if not new:
             raise ValueError("no files added in range (empty increment)")
-        reader = spark.read
-        schema = self._schema(m)
-        if schema is not None and not any("partition" in e for e in new):
-            reader = reader.schema(schema)
-        return reader.parquet(*[e["path"] for e in new])
+        return self._frame(spark, m, new)

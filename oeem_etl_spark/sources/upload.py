@@ -35,6 +35,8 @@ from typing import Protocol
 from pyspark import TaskContext
 from pyspark.sql import DataFrame
 
+from oeem_etl_spark.streaming.harness import drain
+
 
 class TransientUploadError(RuntimeError):
     """Retryable server failure (HTTP 429/5xx analogue)."""
@@ -202,7 +204,6 @@ def upload_foreach_batch(
     checkpoint_dir: str,
     batch_size: int = 100,
     max_attempts: int = 4,
-    timeout_s: int = 300,
 ) -> None:
     """Streaming upload sink: drain ``sdf`` with availableNow, uploading
     every micro-batch via :func:`bulk_upload` keyed by its epoch — the
@@ -219,12 +220,4 @@ def upload_foreach_batch(
             max_attempts=max_attempts,
         )
 
-    q = (
-        sdf.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(f"upload stream exceeded {timeout_s}s")
+    drain(sdf.writeStream.foreachBatch(sink), "upload_foreach_batch", checkpoint_dir)

@@ -8,11 +8,11 @@ narrow within each row group — box predicates on either or both dimensions
 skip most of the file. This is the same idea behind Delta/Iceberg
 Z-ORDER/OPTIMIZE, built here from plain Spark expressions:
 
-- :func:`zorder_key` — 2×``bits``-bit Morton key as an integer Column
-  (pure shift/mask arithmetic, whole-stage-codegen'd).
-- :func:`write_zordered` — range-partition + sort by the key, write
-  parquet. Range partitioning keeps the curve contiguous across files so
-  file-level stats prune too, not just row groups.
+- :func:`write_zordered` — bucketize two columns into [0, 2^``bits``),
+  key rows by :func:`~oeem_etl_spark.operators.layout.zorder_key`,
+  range-partition + sort by the key, write parquet. Range partitioning
+  keeps the curve contiguous across files so file-level stats prune too,
+  not just row groups.
 
 At 100 TB this is a layout decision made once per table at write time;
 readers need no code change — pruning happens in the parquet reader from
@@ -26,6 +26,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from oeem_etl_spark.operators.layout import zorder_key
+
 
 def _bucket(c: Column, lo: Column, hi: Column, bits: int) -> Column:
     """Scale a value into [0, 2^bits) given per-column min/max bounds."""
@@ -37,17 +39,6 @@ def _bucket(c: Column, lo: Column, hi: Column, bits: int) -> Column:
     return F.least(
         F.greatest(F.floor(scaled).cast("long"), F.lit(0)), F.lit((1 << bits) - 1)
     )
-
-
-def zorder_key(a: Column, b: Column, bits: int = 16) -> Column:
-    """Interleave the low ``bits`` bits of two non-negative ints: Morton
-    order. a's bit i lands at position 2i, b's at 2i+1."""
-    key = F.lit(0).cast("long")
-    for i in range(bits):
-        abit = F.shiftright(a.cast("long"), i).bitwiseAND(F.lit(1))
-        bbit = F.shiftright(b.cast("long"), i).bitwiseAND(F.lit(1))
-        key = key + abit * F.lit(1 << (2 * i)) + bbit * F.lit(1 << (2 * i + 1))
-    return key
 
 
 def write_zordered(
@@ -66,7 +57,8 @@ def write_zordered(
     pruning granularity is visible on KB-scale test data; production keeps
     the default ~128 MB groups.
     """
-    assert len(cols) == 2, "z-order here is 2-D; chain keys for more dims"
+    if len(cols) != 2:
+        raise ValueError(f"write_zordered clusters on exactly 2 columns, got {len(cols)}")
     a, b = (F.col(c) for c in cols)
     bounds = df.agg(
         F.min(a).alias("__alo"),
@@ -74,14 +66,13 @@ def write_zordered(
         F.min(b).alias("__blo"),
         F.max(b).alias("__bhi"),
     )
-    with_key = df.crossJoin(F.broadcast(bounds)).withColumn(
-        "__zkey",
-        zorder_key(
-            _bucket(a, F.col("__alo"), F.col("__ahi"), bits),
-            _bucket(b, F.col("__blo"), F.col("__bhi"), bits),
-            bits,
-        ),
-    ).drop("__alo", "__ahi", "__blo", "__bhi")
+    with_key = (
+        df.crossJoin(F.broadcast(bounds))
+        .withColumn("__za", _bucket(a, F.col("__alo"), F.col("__ahi"), bits))
+        .withColumn("__zb", _bucket(b, F.col("__blo"), F.col("__bhi"), bits))
+        .withColumn("__zkey", zorder_key(["__za", "__zb"], bits))
+        .drop("__alo", "__ahi", "__blo", "__bhi", "__za", "__zb")
+    )
     out = (
         with_key.repartitionByRange(n_files, "__zkey")
         .sortWithinPartitions("__zkey")

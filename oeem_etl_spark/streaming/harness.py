@@ -1,16 +1,25 @@
 """Streaming execution harness: drain-to-table and batch-equivalence.
 
-``run_available_now`` is the bridge between the streaming operators (pure
-transformations in streaming/ops.py) and the driver's batch-shaped
-contract: it runs a streaming DataFrame with ``trigger(availableNow=True)``
-into an in-memory sink and returns the sink contents as a regular
-DataFrame. availableNow processes everything currently in the source
-(possibly as several micro-batches, honoring maxFilesPerTrigger) and then
-stops — Spark's sanctioned pattern for incremental batch jobs.
+``drain`` is the one way to run an availableNow query. It sets the
+checkpoint location, starts the writer with ``trigger(availableNow=True)``
+and waits up to ``DRAIN_TIMEOUT_S`` seconds. availableNow processes
+everything currently in the source (possibly as several micro-batches,
+honoring maxFilesPerTrigger) and then stops — Spark's sanctioned pattern
+for incremental batch jobs. The rules:
 
-``foreach_batch_to_parquet`` is the A10 sink: arbitrary per-micro-batch
-logic (the reference's REST-bulk-upload analogue — each batch is a bounded
-DataFrame you may send anywhere); here each batch appends to parquet.
+- a query still running at the timeout is stopped and ``drain`` raises
+  ``TimeoutError``, so a caller never reads a partial result (an
+  interrupted wait stops the query too);
+- a failed query raises from ``drain`` (``StreamingQueryException``);
+- a caller's ``checkpoint_dir`` is kept (restarts resume from it); without
+  one, ``drain`` makes a throwaway checkpoint and removes it however the
+  drain ends.
+
+``run_available_now`` drains into an in-memory sink and returns the sink
+contents as a regular DataFrame; ``foreach_batch_to_parquet``,
+``foreach_batch_capture`` and ``foreach_batch_upsert`` are the A10 sinks
+(the reference's REST-bulk-upload analogue — each batch is a bounded
+DataFrame you may send anywhere).
 """
 
 from __future__ import annotations
@@ -21,6 +30,7 @@ import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamWriter
 
 _counter = itertools.count()
 
@@ -30,60 +40,48 @@ _counter = itertools.count()
 # (HDFS/object store) for failure recovery.
 _CKPT_BASE = "/dev/shm" if os.path.isdir("/dev/shm") else None
 
-
-def _mkdtemp_ckpt(prefix: str) -> str:
-    return tempfile.mkdtemp(prefix=prefix, dir=_CKPT_BASE)
+DRAIN_TIMEOUT_S = 300
 
 
-def run_available_now(
-    sdf: DataFrame,
-    output_mode: str,
-    timeout_s: int = 300,
-    name: str | None = None,
-) -> DataFrame:
-    """Drain a streaming DataFrame into a memory sink; return its table."""
-    name = name or f"oeem_stream_{next(_counter)}"
-    ckpt = _mkdtemp_ckpt(f"oeem_ckpt_{name}_")
+def drain(writer: DataStreamWriter, what: str, checkpoint_dir: str | None = None) -> None:
+    """Run ``writer`` with ``trigger(availableNow=True)`` to completion.
+    ``what`` names the drain in the timeout error and the throwaway
+    checkpoint's name."""
+    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix=f"oeem_ckpt_{what}_", dir=_CKPT_BASE)
     try:
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(timeout_s):
-            q.stop()
-            raise TimeoutError(f"streaming query {name} exceeded {timeout_s}s")
+        q = writer.option("checkpointLocation", ckpt).trigger(availableNow=True).start()
+        try:
+            if not q.awaitTermination(DRAIN_TIMEOUT_S):
+                raise TimeoutError(f"{what} drain exceeded {DRAIN_TIMEOUT_S}s")
+        finally:
+            q.stop()  # a no-op once the query has ended
     finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+        if checkpoint_dir is None:
+            shutil.rmtree(ckpt, ignore_errors=True)
+
+
+def run_available_now(sdf: DataFrame, output_mode: str) -> DataFrame:
+    """Drain a streaming DataFrame into a memory sink; return its rows.
+    The sink's temp view is dropped before returning: the frame keeps the
+    rows alive only as long as the caller holds it."""
+    name = f"oeem_stream_{next(_counter)}"
+    drain(sdf.writeStream.format("memory").queryName(name).outputMode(output_mode), name)
     spark = sdf.sparkSession
-    return spark.table(name)
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
 
 
-def foreach_batch_to_parquet(sdf: DataFrame, path: str, timeout_s: int = 300) -> None:
+def foreach_batch_to_parquet(sdf: DataFrame, path: str) -> None:
     """A10: per-batch arbitrary sink (parquet-append flavor)."""
-    ckpt = _mkdtemp_ckpt("oeem_ckpt_feb_")
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("append").parquet(path)
 
-    try:
-        q = (
-            sdf.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(timeout_s):
-            q.stop()
-            raise TimeoutError(f"foreachBatch sink exceeded {timeout_s}s")
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    drain(sdf.writeStream.foreachBatch(sink), "foreach_batch_to_parquet")
 
 
-def foreach_batch_capture(sdf: DataFrame, path: str, timeout_s: int = 300) -> None:
+def foreach_batch_capture(sdf: DataFrame, path: str) -> None:
     """A10 sink variant that RECORDS THE BATCH ORDINAL: each micro-batch
     appends to parquet with a ``_batch_id`` column. Update-mode stateful
     operators re-emit a key's row every batch it changes in; the sink's
@@ -92,7 +90,6 @@ def foreach_batch_capture(sdf: DataFrame, path: str, timeout_s: int = 300) -> No
     depends on single-batch drains. With the ordinal
     recorded, "final emission per key" is ``max(_batch_id)`` regardless
     of how many micro-batches the source drains in."""
-    ckpt = _mkdtemp_ckpt("oeem_ckpt_cap_")
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.sql import functions as F
@@ -101,19 +98,7 @@ def foreach_batch_capture(sdf: DataFrame, path: str, timeout_s: int = 300) -> No
             "append"
         ).parquet(path)
 
-    try:
-        q = (
-            sdf.writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(timeout_s):
-            q.stop()
-            raise TimeoutError(f"foreachBatch capture sink exceeded {timeout_s}s")
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    drain(sdf.writeStream.foreachBatch(sink).outputMode("update"), "foreach_batch_capture")
 
 
 def assert_batch_equivalent(
@@ -138,7 +123,6 @@ def foreach_batch_upsert(
     target_path: str,
     keys: list[str],
     order_cols: list[str],
-    timeout_s: int = 300,
     output_mode: str | None = None,
 ) -> None:
     """Streaming upsert sink: each micro-batch merges into a parquet
@@ -160,8 +144,6 @@ def foreach_batch_upsert(
     """
     from oeem_etl_spark.operators.relational import dedupe_keep_latest_by
 
-    ckpt = _mkdtemp_ckpt("oeem_ckpt_upsert_")
-
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         delta = dedupe_keep_latest_by(batch_df, keys, order_cols)
@@ -181,20 +163,10 @@ def foreach_batch_upsert(
         os.replace(tmp, target_path)
         shutil.rmtree(old, ignore_errors=True)
 
-    try:
-        writer = sdf.writeStream.foreachBatch(sink)
-        if output_mode is not None:
-            # aggregations without watermark need "update" — the merge
-            # absorbs re-emissions of a growing group, so update-mode
-            # batches converge on the same target as a final snapshot
-            writer = writer.outputMode(output_mode)
-        q = (
-            writer.option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(timeout_s):
-            q.stop()
-            raise TimeoutError(f"upsert sink exceeded {timeout_s}s")
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    writer = sdf.writeStream.foreachBatch(sink)
+    if output_mode is not None:
+        # aggregations without watermark need "update" — the merge
+        # absorbs re-emissions of a growing group, so update-mode
+        # batches converge on the same target as a final snapshot
+        writer = writer.outputMode(output_mode)
+    drain(writer, "foreach_batch_upsert")

@@ -251,70 +251,6 @@ def _agg_names(agged: DataFrame, n_grouping: int) -> list[str]:
     return agged.columns[n_grouping:]
 
 
-def tws_available() -> bool:
-    """Capability probe for the transformWithStateInPandas surface: the
-    stateful-v2 Python runner speaks protobuf to the JVM, so the API is
-    only usable where ``google.protobuf`` is importable. Callers should
-    check this and fall back to :func:`running_totals_state`
-    (applyInPandasWithState, no extra deps) where it returns False."""
-    try:
-        import google.protobuf.descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def running_totals_tws(df: DataFrame, key: str = "user_id", value_col: str = "value"):
-    """I6 via transformWithStateInPandas (Spark 4's stateful-v2 API).
-
-    Same semantics as :func:`running_totals_state` but on the new
-    StatefulProcessor surface: typed ValueState handles, explicit init/
-    close lifecycle, per-key Arrow batches. The v2 API is where Spark is
-    headed (state TTL, multiple state variables, timers) — kept alongside
-    the v1 operator so both surfaces stay exercised.
-
-    ENVIRONMENT NOTE: executing TWS requires ``google.protobuf`` (the
-    stateful-v2 runner speaks protobuf to the JVM); this container lacks
-    it, so the test for this operator import-skips. Prefer
-    :func:`running_totals_state` where protobuf availability is unknown.
-    """
-    if not tws_available():
-        raise ImportError(
-            "transformWithStateInPandas needs google.protobuf (absent in "
-            "this environment) — use running_totals_state "
-            "(applyInPandasWithState) instead; see tws_available()"
-        )
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-    import pandas as pd
-
-    out_schema = f"{key} bigint, n_events bigint, total_value double"
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("totals", "n bigint, micros bigint")
-
-        def handleInputRows(self, key_tuple, rows, timerValues):
-            n, micros = self._state.get() if self._state.exists() else (0, 0)
-            for pdf in rows:
-                n += len(pdf)
-                # same half-away-from-zero quantization as the v1 paths
-                # (pandas .round(0) is half-to-even)
-                micros += sum_micros(pdf[value_col].to_numpy("float64"))
-            self._state.update((int(n), int(micros)))
-            yield pd.DataFrame(
-                {key: [key_tuple[0]], "n_events": [n], "total_value": [round(micros / 1e6, 6)]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return df.groupBy(key).transformWithStateInPandas(
-        RunningTotals(), outputStructType=out_schema, outputMode="Update",
-        timeMode="None",
-    )
-
-
 def interval_join_stream(
     left: DataFrame,
     right: DataFrame,

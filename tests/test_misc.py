@@ -4,6 +4,7 @@ is checked against its exact equivalent here."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from oeem_etl_spark.catalog import load_table
@@ -322,3 +323,55 @@ def test_round_tie_divergence_engine_note(spark, duck):
         ).fetchone()[0]
     )
     assert s2 == d2 == 311582.54
+
+
+def _vectors(spark, rows):
+    return spark.createDataFrame(rows, "embedding array<float>")
+
+
+def _bad_zorder_cols(spark):
+    from oeem_etl_spark.sources.zorder import write_zordered
+
+    write_zordered(spark.range(3), "unused", ["id", "id", "id"])
+
+
+def _bad_deletions(spark):
+    from oeem_etl_spark.operators.text import deletion_variants
+
+    deletion_variants("w", max_deletions=3)
+
+
+def _pca_fit_empty(spark):
+    from oeem_etl_spark.operators.decomp import pca_fit
+
+    pca_fit(_vectors(spark, []), "embedding", k=1)
+
+
+def _pca_power_empty(spark):
+    from oeem_etl_spark.operators.decomp import pca_power_fixed
+
+    pca_power_fixed(_vectors(spark, []), "embedding", dim=2)
+
+
+def _pca_power_constant(spark):
+    from oeem_etl_spark.operators.decomp import pca_power_fixed
+
+    pca_power_fixed(_vectors(spark, [([1.0, 2.0],)] * 4), "embedding", dim=2)
+
+
+@pytest.mark.parametrize(
+    "call, match",
+    [
+        (_bad_zorder_cols, "exactly 2 columns"),
+        (_bad_deletions, "max_deletions"),
+        (_pca_fit_empty, "empty input"),
+        (_pca_power_empty, "empty input"),
+        (_pca_power_constant, "zero covariance"),
+    ],
+    ids=lambda v: v.__name__.lstrip("_") if callable(v) else None,
+)
+def test_caller_input_checks_raise_value_error(spark, call, match):
+    """Bad caller input raises ValueError, not an assert that
+    ``python -O`` strips."""
+    with pytest.raises(ValueError, match=match):
+        call(spark)

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from oeem_etl_spark.sources.snapshots import CommitConflict, SnapshotTable
+from oeem_etl_spark.streaming import harness
 
 
 def _ids(df) -> list[int]:
@@ -201,15 +202,13 @@ def test_streaming_restart_does_not_double_commit(spark, tmp_path):
             .option("maxFilesPerTrigger", "1")
             .parquet(os.path.join(src, "*.parquet"))
         )
-        q = (
+        harness.drain(
             sdf.writeStream.foreachBatch(
                 lambda bdf, bid: table.commit(bdf, batch_id=bid) and None
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            ),
+            "restart",
+            ckpt,
         )
-        q.awaitTermination(120)
 
     run()
     v_after_first = table.latest_version()
@@ -266,6 +265,22 @@ def test_incremental_feed_appends_only(spark, table):
         table.read_incremental(spark, 2)
     # ranges entirely before the rewrite still work
     assert _ids(table.read_incremental(spark, 2, 3)) == list(range(20, 30))
+
+
+def test_incremental_feed_keeps_partition_columns(spark, table):
+    """A change feed over hive-partitioned appends has ``read``'s columns
+    (the partition column comes back from the directory names) and only
+    the appended rows."""
+    mk = lambda lo, hi: spark.range(lo, hi).select(  # noqa: E731
+        "id", (F.col("id") % 2).cast("string").alias("dt")
+    )
+    table.commit(mk(0, 10), partition_by=["dt"])
+    table.commit(mk(10, 16), partition_by=["dt"])
+    inc = table.read_incremental(spark, 1)
+    assert inc.columns == table.read(spark).columns == ["id", "dt"]
+    assert sorted((r["id"], str(r["dt"])) for r in inc.collect()) == [
+        (i, str(i % 2)) for i in range(10, 16)
+    ]
 
 
 def test_prune_to_empty_returns_empty_frame_not_error(spark, tmp_path):

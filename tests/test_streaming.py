@@ -168,36 +168,6 @@ def test_running_totals_state_multi_batch(spark, tmp_path):
     assert [(r["n_events"], r["total_value"]) for r in rows] == [(3, 6.0), (5, 15.0)]
 
 
-def test_running_totals_tws_matches_v1(spark, tmp_path):
-    """I6 on the stateful-v2 API (transformWithStateInPandas) must produce
-    the same final per-key totals as the v1 applyInPandasWithState op.
-    Skips where the TWS runner's protobuf dependency is absent."""
-    if not ops.tws_available():
-        # documented impossibility in this container (BASELINE.md): the
-        # stateful-v2 runner needs protobuf, which cannot be installed here;
-        # the capability probe + ImportError path is tested instead.
-        with pytest.raises(ImportError, match="protobuf"):
-            ops.running_totals_tws(spark.range(1).selectExpr("id user_id", "1.0 value"))
-        pytest.skip("google.protobuf absent: TWS unusable here by construction")
-    d = str(tmp_path / "tws")
-    os.makedirs(d, exist_ok=True)
-    _write_ordered_files(spark, d, _TWO_BATCHES)
-    schema = "id long, user_id long, ts timestamp"
-
-    def src():
-        return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(d + "/batch*")
-            .withColumn("value", F.col("id").cast("double"))
-        )
-
-    v2 = harness.run_available_now(ops.running_totals_tws(src()), "update")
-    rows = sorted(map(tuple, v2.collect()))
-    # final emission per key equals the exact totals: 5 events, sum ids 15
-    assert rows[-1] == (1, 5, 15.0), rows
-
-
 def test_sliding_batch_equivalence(spark, ev_batch, ev_stream):
     def tf(df):
         return ops.sliding_agg(
@@ -312,19 +282,17 @@ def test_checkpoint_resume_exactly_once(spark, sf_dir, tmp_path):
     schema = spark.read.parquet(str(src)).schema
 
     def run_phase():
-        q = (
+        harness.drain(
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(str(src))
             .withColumn("boosted", F.col("value") * 2)
             .writeStream.format("parquet")
             .option("path", str(sink))
-            .option("checkpointLocation", str(ckpt))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+            .outputMode("append"),
+            "phase",
+            str(ckpt),
         )
-        assert q.awaitTermination(120)
 
     run_phase()
     n_phase1 = spark.read.parquet(str(sink)).count()
@@ -360,18 +328,16 @@ def test_python_stream_source_incremental_offsets(spark, tmp_path):
             (landing / f"{t}.xml").write_text(pds.synthetic_espi_xml(t))
 
     def drain():
-        q = (
+        harness.drain(
             spark.readStream.format("espi_dir")
             .option("path", str(landing))
             .load()
             .writeStream.format("parquet")
             .option("path", str(sink))
-            .option("checkpointLocation", str(ckpt))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+            .outputMode("append"),
+            "espi",
+            str(ckpt),
         )
-        assert q.awaitTermination(120)
 
     land([0, 1, 2])
     drain()
@@ -523,7 +489,7 @@ def test_quantize_micros_half_away_from_zero():
     """ONE quantization form across all state paths.
     The helper must round .5 ties AWAY from zero (Spark/DuckDB ROUND),
     where numpy .round / pandas .round(0) go half-to-even — 0.0000005
-    and 1.5e-6-style ties are exactly where the old TWS/extremes
+    and 1.5e-6-style ties are exactly where an earlier extremes
     .round(0) path diverged from the v1 operators."""
     import numpy as np
 
@@ -762,3 +728,77 @@ def test_state_functions_raise_no_pandas_future_warning(
 
     plans.load_all()
     assert registry.all_queries()[name].fn(spark, sf_dir).collect()
+
+
+# ---------------------------------------------------------------------------
+# harness.drain: bounded wait, no partial results, no leftovers
+
+
+def _one_file_stream(spark, tmp_path):
+    src = str(tmp_path / "src")
+    spark.range(0, 10).write.parquet(src)
+    return spark.readStream.schema("id long").parquet(src)
+
+
+def test_drain_timeout_stops_query_and_removes_checkpoint(spark, tmp_path, monkeypatch):
+    """A drain still running at DRAIN_TIMEOUT_S raises instead of leaving
+    a half-drained sink behind: the query is stopped and the throwaway
+    checkpoint is gone."""
+    ckpt_base = tmp_path / "ckpts"
+    ckpt_base.mkdir()
+    monkeypatch.setattr(harness, "DRAIN_TIMEOUT_S", 1)
+    monkeypatch.setattr(harness, "_CKPT_BASE", str(ckpt_base))
+
+    def slow_sink(batch_df, batch_id):
+        time.sleep(4)
+
+    writer = _one_file_stream(spark, tmp_path).writeStream.foreachBatch(slow_sink)
+    with pytest.raises(TimeoutError, match="slow drain exceeded 1s"):
+        harness.drain(writer, "slow")
+    assert spark.streams.active == []
+    assert list(ckpt_base.iterdir()) == []
+
+
+def test_run_available_now_leaves_no_sink_view(spark, tmp_path):
+    """The memory sink's temp view is dropped on return; the returned frame
+    and frames derived from it still collect."""
+    out = harness.run_available_now(_one_file_stream(spark, tmp_path), "append")
+    names = [t.name for t in spark.catalog.listTables()]
+    assert not [n for n in names if n.startswith("oeem_stream_")], names
+    assert sorted(r["id"] for r in out.collect()) == list(range(10))
+    assert out.where(F.col("id") % 2 == 0).count() == 5
+
+
+def test_i10_streaming_cms_leaves_no_checkpoint_dir(spark):
+    """i10 drains through a throwaway checkpoint, so it adds no directory
+    where throwaway checkpoints live (leftovers already there are not
+    counted against it)."""
+    import tempfile
+
+    from oeem_etl_spark.plans.streaming_queries import i10_streaming_cms
+
+    base = harness._CKPT_BASE or tempfile.gettempdir()
+
+    def dirs():
+        return {e.name for e in os.scandir(base) if e.is_dir()}
+
+    before = dirs()
+    assert i10_streaming_cms(spark, SMALL_SF).count() == 5
+    assert dirs() - before == set()
+
+
+def test_drain_keeps_caller_checkpoint_and_restart_is_a_no_op(spark, tmp_path):
+    """The a22 replay contract: a caller's checkpoint survives the drain,
+    and a restart over it with no new input runs no batch."""
+    ckpt = str(tmp_path / "ckpt")
+    batches = []
+    sdf = _one_file_stream(spark, tmp_path)
+
+    def sink(batch_df, batch_id):
+        batches.append((batch_id, batch_df.count()))
+
+    harness.drain(sdf.writeStream.foreachBatch(sink), "keep", ckpt)
+    assert batches == [(0, 10)]
+    assert os.listdir(os.path.join(ckpt, "commits"))
+    harness.drain(sdf.writeStream.foreachBatch(sink), "keep", ckpt)
+    assert batches == [(0, 10)]
