@@ -225,11 +225,7 @@ def a44_fetch_upload_by_lang(spark, sf_dir):
     ffactory = functools.partial(
         fx.local_flaky_fetcher, remote=remote, fail_times=2, state_dir=fstate
     )
-    statuses = {
-        r["status"]
-        for r in fx.fetch_to_landing(tasks, ffactory, landing).collect()
-    }
-    assert statuses <= {"fetched", "skipped"}
+    fx.check_fetched(fx.fetch_to_landing(tasks, ffactory, landing))
 
     raw = spark.read.option("header", True).schema(
         "lang string, n_chars long"
@@ -1571,11 +1567,7 @@ def a45_fetch_csv_normalize(spark, sf_dir):
     ffactory = functools.partial(
         fx.local_flaky_fetcher, remote=remote, fail_times=1, state_dir=fstate
     )
-    statuses = {
-        r["status"]
-        for r in fx.fetch_to_landing(tasks, ffactory, landing).collect()
-    }
-    assert statuses <= {"fetched", "skipped"}
+    fx.check_fetched(fx.fetch_to_landing(tasks, ffactory, landing))
 
     # parse stage: STRING schema on purpose (the raw-feed case), then
     # rename + cast + filter — the B1/B5/B3 cleanup pass

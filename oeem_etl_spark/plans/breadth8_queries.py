@@ -528,8 +528,7 @@ def a61_fetch_upsert_reconcile(spark, sf_dir):
             fail_times=1,
             state_dir=fstate,
         )
-        st = {r["status"] for r in fx.fetch_to_landing(tasks, ff, landing).collect()}
-        assert st <= {"fetched", "skipped"}
+        fx.check_fetched(fx.fetch_to_landing(tasks, ff, landing))
         return spark.read.option("header", True).schema(
             "o_orderkey long, status string, price string, seq int"
         ).csv(landing).withColumn("price", F.col("price").cast("double"))

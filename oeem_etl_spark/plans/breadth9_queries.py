@@ -1908,11 +1908,7 @@ def a64_orders_csv_pipeline(spark, sf_dir):
     ffactory = functools.partial(
         fx.local_flaky_fetcher, remote=remote, fail_times=1, state_dir=fstate
     )
-    statuses = {
-        r["status"]
-        for r in fx.fetch_to_landing(tasks, ffactory, landing).collect()
-    }
-    assert statuses <= {"fetched", "skipped"}
+    fx.check_fetched(fx.fetch_to_landing(tasks, ffactory, landing))
 
     raw = spark.read.option("header", True).schema(
         "o_orderkey string, o_orderpriority string, "

@@ -739,11 +739,7 @@ def a36_fetch_upload_by_type(spark, sf_dir):
     ffactory = functools.partial(
         fx.local_flaky_fetcher, remote=remote, fail_times=1, state_dir=fstate
     )
-    statuses = {
-        r["status"]
-        for r in fx.fetch_to_landing(tasks, ffactory, landing).collect()
-    }
-    assert statuses <= {"fetched", "skipped"}
+    fx.check_fetched(fx.fetch_to_landing(tasks, ffactory, landing))
 
     raw = spark.read.option("header", True).schema(
         "event_type string, value double"

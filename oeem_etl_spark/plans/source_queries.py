@@ -271,8 +271,7 @@ def a14_fetch_upload_pipeline(spark, sf_dir):
     ffactory = functools.partial(
         fx.local_flaky_fetcher, remote=remote, fail_times=1, state_dir=fstate
     )
-    statuses = {r["status"] for r in fx.fetch_to_landing(tasks, ffactory, landing).collect()}
-    assert statuses <= {"fetched", "skipped"}
+    fx.check_fetched(fx.fetch_to_landing(tasks, ffactory, landing))
 
     # 2. parse + 3. transform (dsum-style integer-micros for determinism)
     raw = spark.read.option("header", True).schema("bucket long, value double").csv(landing)
@@ -342,11 +341,7 @@ def a15_python_datasource(spark, sf_dir):
         [(f"{t}.xml", f"synthetic://{t}") for t in range(20)],
         "task_id string, uri string",
     )
-    statuses = {
-        r["status"]
-        for r in fx.fetch_to_landing(tasks, pds.SyntheticEspiFetcher, landing).collect()
-    }
-    assert statuses <= {"fetched", "skipped"}
+    fx.check_fetched(fx.fetch_to_landing(tasks, pds.SyntheticEspiFetcher, landing))
     pds.register(spark)
     return spark.read.format("espi_dir").option("path", landing).load()
 
@@ -487,11 +482,7 @@ def a15b_python_stream_source(spark, sf_dir):
         [(f"{t}.xml", f"synthetic://{t}") for t in range(12)],
         "task_id string, uri string",
     )
-    statuses = {
-        r["status"]
-        for r in fx.fetch_to_landing(tasks, pds.SyntheticEspiFetcher, landing).collect()
-    }
-    assert statuses <= {"fetched", "skipped"}
+    fx.check_fetched(fx.fetch_to_landing(tasks, pds.SyntheticEspiFetcher, landing))
     pds.register(spark)
     sdf = spark.readStream.format("espi_dir").option("path", landing).load()
     return harness.run_available_now(sdf, "append")
@@ -1033,8 +1024,7 @@ def a37_fetch_upload_stats(spark, sf_dir):
     ffactory = functools.partial(
         fx.local_flaky_fetcher, remote=remote, fail_times=2, state_dir=fstate
     )
-    statuses = {r["status"] for r in fx.fetch_to_landing(tasks, ffactory, landing).collect()}
-    assert statuses <= {"fetched", "skipped"}
+    fx.check_fetched(fx.fetch_to_landing(tasks, ffactory, landing))
 
     raw = spark.read.option("header", True).schema(
         "event_type string, value double"

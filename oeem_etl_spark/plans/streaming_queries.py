@@ -462,7 +462,7 @@ def i12_stream_outer_join(spark, sf_dir):
     vts + 90min < max view ts). Verified against the drained stream at
     every fixture sf, where the withheld tail is genuinely non-empty.
 
-    The oracle hard-codes two data-dependent facts, asserted below before
+    The oracle hard-codes two data-dependent facts, checked below before
     the stream runs so a fixture change fails loudly instead of silently
     diverging: (1) the min multi-watermark is the VIEW side — requires
     max(purchase ts) >= max(filtered view ts); (2) no view's exact
@@ -475,19 +475,21 @@ def i12_stream_outer_join(spark, sf_dir):
         F.max(F.when(is_view, F.col("ts"))).alias("mv"),
         F.max(F.when(F.col("event_type") == "purchase", F.col("ts"))).alias("mp"),
     ).first()
-    assert mx["mp"] >= mx["mv"], (
-        f"i12 oracle invariant broken: max purchase ts {mx['mp']} < max view ts "
-        f"{mx['mv']} — the min multi-watermark would be the purchase side and "
-        "the oracle's emission rule no longer models Spark"
-    )
+    if mx["mp"] < mx["mv"]:
+        raise RuntimeError(
+            f"i12 oracle invariant broken: max purchase ts {mx['mp']} < max view ts "
+            f"{mx['mv']} — the min multi-watermark would be the purchase side and "
+            "the oracle's emission rule no longer models Spark"
+        )
     on_boundary = ev.where(
         is_view & (F.col("ts") + F.expr("INTERVAL 90 MINUTES") == F.lit(mx["mv"]))
     ).count()
-    assert on_boundary == 0, (
-        "i12 oracle invariant broken: a view's emission horizon equals the "
-        "watermark boundary exactly — the oracle's strict '<' and Spark "
-        "disagree at equality"
-    )
+    if on_boundary != 0:
+        raise RuntimeError(
+            "i12 oracle invariant broken: a view's emission horizon equals the "
+            "watermark boundary exactly — the oracle's strict '<' and Spark "
+            "disagree at equality"
+        )
     views = events_stream(spark, sf_dir).where(
         (F.col("event_type") == "view") & (F.col("ts") < cutoff)
     )

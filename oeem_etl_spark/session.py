@@ -62,6 +62,23 @@ daemon fails every Python task.
   It is a static SQL conf, read when the cache is first used, so it is
   set in the builder and not in ``configure``; sessions built elsewhere
   keep the default of 100.
+- ``spark.python.sql.dataFrameDebugging.enabled`` = false. PySpark 4 wraps
+  every ``F.*`` function and ``Column`` operator so that it records the
+  Python caller's ``file:line`` for ANSI error messages. Each wrapped call
+  costs four py4j round trips (``getActiveSession``, a conf read of
+  ``spark.sql.stackTracesInDataFrameContext``, and setting and clearing
+  ``PySparkCurrentOrigin``), whether or not anything fails. One warm
+  build of ``k23_calendarize`` sent 3,217 py4j commands with capture on
+  and 937 with it off; the nine ``meter_etl`` queries together sent
+  7,622 and 2,832. What an error loses is only the line under
+  ``== DataFrame ==``: the exception class, the error condition and the
+  message stay the same, but on ``id / 0`` that line names a JVM
+  reflection frame instead of the Python caller. PySpark reads the
+  setting once per process, on the first wrapped call made while a
+  session is active, and keeps the answer
+  (``pyspark.errors.utils._enable_debugging_cache``), so a runtime set
+  after that would not take effect: it is set in the builder and not in
+  ``configure``. Sessions built elsewhere keep capture on.
 """
 
 from __future__ import annotations
@@ -130,6 +147,8 @@ def get_session(app_name: str = "oeem_etl_spark", cpus: str | int | None = None)
         .config("spark.python.daemon.module", "oeem_etl_spark.worker_daemon")
         # Static: the JVM-wide generated-code cache is sized on first use.
         .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # Read once per process, on the first Column call: see the docstring.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     spark = builder.getOrCreate()

@@ -19,6 +19,8 @@ This sandbox has no network, so the transport is pluggable:
   batch and writes one landing file per task, atomically (tmp + rename).
   Idempotent: tasks whose landing file already exists are skipped (the
   Luigi target-existence contract), so a failed run re-runs safely.
+- :func:`check_fetched` — collects a status frame and raises unless every
+  task landed.
 
 Scale posture: the task frame is tiny (one row per remote resource); the
 payload bytes never pass through the driver — each executor writes its own
@@ -169,3 +171,15 @@ def fetch_to_landing(
             yield pd.DataFrame(rows, columns=["task_id", "status", "n_bytes"])
 
     return tasks.mapInPandas(run, "task_id string, status string, n_bytes long")
+
+
+def check_fetched(statuses: DataFrame) -> None:
+    """Run a :func:`fetch_to_landing` status frame and raise
+    ``RuntimeError`` naming every task whose status is neither ``fetched``
+    nor ``skipped``: a task that did not land would otherwise leave the
+    landing directory, and every read of it, short."""
+    failed = sorted(
+        r["task_id"] for r in statuses.collect() if r["status"] not in ("fetched", "skipped")
+    )
+    if failed:
+        raise RuntimeError(f"fetch did not land tasks {failed}")

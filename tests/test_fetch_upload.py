@@ -10,6 +10,7 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
+from oeem_etl_spark.catalog import local_frame
 from oeem_etl_spark.sources import fetch as fx
 from oeem_etl_spark.sources import upload as up
 
@@ -49,6 +50,15 @@ def test_fetch_with_retry_transient_then_permanent(tmp_path):
     # missing resource is permanent: no retry loop
     with pytest.raises(fx.FetchError, match="no such remote"):
         fx.fetch_with_retry(fx.LocalDirFetcher(remote), "nope.csv")
+
+
+def test_check_fetched_raises_on_a_task_that_did_not_land(spark):
+    schema = "task_id string, status string, n_bytes long"
+    ok = [("a.csv", "fetched", 3), ("b.csv", "skipped", 4)]
+    fx.check_fetched(local_frame(spark, ok, schema))
+    statuses = local_frame(spark, ok + [("c.csv", "failed", 0)], schema)
+    with pytest.raises(RuntimeError, match=r"\['c.csv'\]"):
+        fx.check_fetched(statuses)
 
 
 def test_fetch_to_landing_distributed_and_idempotent(spark, tmp_path):

@@ -1,12 +1,19 @@
 """One policy for the engine's runtime SQL settings (session.configure):
 every session gets them once, on get_session or on its first table load,
 and a caller's later override sticks. Launch settings of get_session hold
-too: a warm pass reuses the classes Spark generated on the previous one."""
+too: a warm pass reuses the classes Spark generated on the previous one,
+and Column calls capture no Python call site."""
 
 from __future__ import annotations
 
 import sys
+import threading
 from pathlib import Path
+
+import pytest
+from pyspark.errors import ArithmeticException
+from pyspark.errors.utils import is_debugging_enabled
+from pyspark.sql import functions as F
 
 from oeem_etl_spark import catalog
 from oeem_etl_spark.plans import load_all, registry
@@ -75,3 +82,40 @@ def test_warm_pass_compiles_no_generated_classes(spark, sf_dir):
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
         spark.catalog.clearCache()
+
+
+def test_column_calls_capture_no_call_site(spark):
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert is_debugging_enabled() is False
+
+
+def test_warm_build_sends_few_py4j_commands(spark, sf_dir):
+    """With call-site capture on, every F.* function and Column operator
+    sent four more commands (active session, stack-trace depth conf, set
+    and clear the origin): one warm k23 build sent 3,217, and 937 without."""
+    load_all()
+    build = registry.all_queries()["k23_calendarize"].fn
+    build(spark, sf_dir)  # cold: loads and caches its tables
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    caller = threading.get_ident()
+    sent = 0
+
+    def counting(command, *args, **kwargs):
+        nonlocal sent
+        # py4j's finalizer thread sends object deletes through the same client
+        sent += threading.get_ident() == caller
+        return send(command, *args, **kwargs)
+
+    client.send_command = counting
+    try:
+        build(spark, sf_dir)
+    finally:
+        del client.send_command
+    assert 0 < sent < 1600
+
+
+def test_ansi_error_still_raises_with_its_condition(spark):
+    with pytest.raises(ArithmeticException) as err:
+        spark.range(1).select(F.col("id") / F.lit(0)).collect()
+    assert err.value.getCondition() == "DIVIDE_BY_ZERO"
